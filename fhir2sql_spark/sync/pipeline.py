@@ -18,22 +18,31 @@ the reference's doc comment src/main.rs:159-175):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from collections import Counter
 from collections.abc import Callable
+from contextlib import ExitStack, closing
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.sinks import jdbc_upsert
+from fhir2sql_spark.sync.diff import OP_DELETE, OP_INSERT, OP_NOOP, OP_UPDATE, diff_snapshots
+from fhir2sql_spark.sync.fhir import extract_versions, partition_malformed, well_formed
 
 # Parallelism of insert-pk allocation (buckets = concurrent tasks).
 _PK_BUCKETS = 64
-from fhir2sql_spark.sync.diff import OP_DELETE, OP_INSERT, OP_NOOP, OP_UPDATE, diff_snapshots
-from fhir2sql_spark.sync.fhir import extract_versions, partition_malformed
 
 
 @dataclass
 class SyncStats:
+    """Outcome of one ``sync_resources`` call. ``source_count``
+    (well-formed resources) and ``malformed`` come from one aggregate
+    over the same pinned source read the diff and the writes consume,
+    and the op counts from one aggregate over the pinned change-set, so
+    the rows counted are the rows written. ``mirror_count_after`` is
+    the target's ``COUNT(*)`` once the writes have landed."""
+
     inserts: int
     updates: int
     deletes: int
@@ -54,18 +63,17 @@ def extract_mirror_versions(mirror_raw: DataFrame) -> DataFrame:
     distributed — the version-extraction half of the reference's
     full-scan + BTreeMap build (src/main.rs:49-75). Accepts either
     column name for the pk so a raw ``SELECT id, resource`` JDBC frame
-    plugs in unchanged. Unparseable rows are skipped (src/main.rs:60-63)
-    via the null-extraction filter."""
+    plugs in unchanged. Unparseable rows keep their pk_id with NULL
+    res_key/mir_version: their id is still taken, so pk allocation must
+    see them, while the diff skips them (src/main.rs:60-63) through
+    ``well_formed("mir_version")``."""
     id_col = "pk_id" if "pk_id" in mirror_raw.columns else "id"
-    ext = mirror_raw.select(
+    return mirror_raw.select(
         F.col(id_col).cast("int").alias("pk_id"),
         F.get_json_object("resource", "$.id").alias("res_key"),
         F.get_json_object("resource", "$.meta.versionId")
         .try_cast("long")
         .alias("mir_version"),
-    )
-    return ext.where(
-        F.col("res_key").isNotNull() & F.col("mir_version").isNotNull()
     )
 
 
@@ -106,6 +114,13 @@ def sync_resources(
 ) -> SyncStats:
     """One full sync of raw source resources into the mirror table.
 
+    The source is read exactly once. Its extraction is pinned, and one
+    aggregate over the pin yields ``source_count`` and ``malformed``
+    before the diff and the writes consume that same pinned read; the
+    tagged change-set is pinned too and gives every op count and the
+    insert-bucket sizes in one more aggregate. Both pins are released
+    when the sync returns or raises.
+
     ``dialect="pg"`` routes every emitted statement through the
     PostgreSQL dialect (%s paramstyle, ::jsonb casts — see
     sinks/pg_dialect.py); wire-verified against a real server in
@@ -138,131 +153,146 @@ def sync_resources(
     table, then ONE set-based transaction applies update/insert/delete
     (atomic visibility — the preferred shape when the target supports
     it)."""
-    extracted = extract_versions(source_resources)
-    well_formed, malformed = partition_malformed(extracted)
-    n_malformed = malformed.count()
+    with ExitStack() as pins:
+        extracted = extract_versions(source_resources).cache()
+        pins.callback(extracted.unpersist)
+        # The only read of the source: this aggregate fills the pin, and
+        # the diff below consumes the pin.
+        ok = well_formed()
+        src_count, n_malformed = extracted.agg(
+            F.count_if(ok), F.count_if(~ok)
+        ).first()
 
-    if mirror_df is not None:
-        mirror = extract_mirror_versions(mirror_df)
-    else:
-        mirror = read_mirror_versions(spark, connect_fn, table)
-    tagged = diff_snapshots(
-        well_formed.select("res_key", "src_version", "resource"),
-        mirror.select("res_key", "mir_version", "pk_id"),
-    ).cache()
+        if mirror_df is not None:
+            mirror = extract_mirror_versions(mirror_df)
+        else:
+            mirror = read_mirror_versions(spark, connect_fn, table)
+        # New pks for inserts: allocated deterministically above the
+        # current max over EVERY mirror row, unparseable ones included
+        # (their ids are taken). The reference lets SERIAL do this; a
+        # distributed sink needs explicit allocation to stay parallel.
+        # A top-1, not agg(max): per-partition top-k with no exchange,
+        # so one Spark job instead of two.
+        top = mirror.select("pk_id").orderBy(F.desc_nulls_last("pk_id")).first()
+        max_pk = (top and top[0]) or 0
+        source, _ = partition_malformed(extracted)
+        # Allocation is bucket-parallel: an unpartitioned row_number
+        # would pull every insert through ONE task — on an initial full
+        # load that serializes the whole dataset. Instead hash res_key
+        # into _PK_BUCKETS buckets (inserts only), row_number inside
+        # each bucket (distributed), and add per-bucket offsets computed
+        # from bucket counts (a _PK_BUCKETS-row driver-side cumsum). Ids
+        # are dense in (bucket, res_key) order — deterministic across
+        # runs and retries, just not globally res_key-sorted.
+        tagged = diff_snapshots(
+            source.select("res_key", "src_version", "resource"),
+            mirror.where(well_formed("mir_version")).select(
+                "res_key", "mir_version", "pk_id"
+            ),
+        ).withColumn(
+            "__bucket",
+            F.when(
+                F.col("op") == OP_INSERT,
+                F.pmod(F.xxhash64("res_key"), F.lit(_PK_BUCKETS)).cast("int"),
+            ),
+        ).cache()
+        pins.callback(tagged.unpersist)
 
-    # New pks for inserts: allocated deterministically above the
-    # current max (the reference lets SERIAL do this; a distributed
-    # sink needs explicit allocation to stay parallel). Allocation is
-    # bucket-parallel: an unpartitioned row_number would pull every
-    # insert through ONE task — on an initial full load that
-    # serializes the whole dataset (round-1 advisor finding). Instead
-    # hash res_key into _PK_BUCKETS buckets, row_number inside each
-    # bucket (distributed), and add per-bucket offsets computed from
-    # bucket counts (a _PK_BUCKETS-row driver-side cumsum). Ids are
-    # dense in (bucket, res_key) order — deterministic across runs
-    # and retries, just not globally res_key-sorted.
-    max_pk = (mirror.agg(F.max("pk_id")).collect()[0][0]) or 0
-    bucketed = tagged.where(F.col("op") == OP_INSERT).withColumn(
-        "__bucket", F.pmod(F.xxhash64("res_key"), F.lit(_PK_BUCKETS)).cast("int")
-    )
-    counts = {
-        r["__bucket"]: r["n"]
-        for r in bucketed.groupBy("__bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    offset_col = F.coalesce(
-        *[F.when(F.col("__bucket") == b, F.lit(off)) for b, off in offsets.items()],
-        F.lit(0),
-    ) if offsets else F.lit(0)
-    w_bucket = Window.partitionBy("__bucket").orderBy("res_key")
-    inserts = (
-        bucketed.withColumn(
-            "pk_id",
-            (F.row_number().over(w_bucket) + offset_col + F.lit(max_pk)).cast("int"),
-        )
-        .select("pk_id", "resource")
-    )
-    updates = tagged.where(F.col("op") == OP_UPDATE).select("resource", "pk_id")
-    deletes = tagged.where(F.col("op") == OP_DELETE).select("pk_id")
-    if not apply_deletes:
-        deletes = deletes.limit(0)
+        op_counts, bucket_counts = Counter(), {}
+        for r in tagged.groupBy("op", "__bucket").count().collect():
+            op_counts[r["op"]] += r["count"]
+            if r["op"] == OP_INSERT:
+                bucket_counts[r["__bucket"]] = r["count"]
+        if not apply_deletes:
+            op_counts[OP_DELETE] = 0
 
-    stats_rows = {
-        r["op"]: r["n"]
-        for r in tagged.groupBy("op").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    if not apply_deletes:
-        stats_rows[OP_DELETE] = 0
-
-    if strategy == "merge":
-        stage = f"{table}__stage"
-        staged = (
-            inserts.select("pk_id", F.lit("insert").alias("op"), "resource")
-            .unionByName(
-                updates.select("pk_id", F.lit("update").alias("op"), "resource")
+        offsets, acc = {}, 0
+        for b in sorted(bucket_counts):
+            offsets[b] = acc
+            acc += bucket_counts[b]
+        offset_col = F.coalesce(
+            *[F.when(F.col("__bucket") == b, F.lit(off)) for b, off in offsets.items()],
+            F.lit(0),
+        ) if offsets else F.lit(0)
+        w_bucket = Window.partitionBy("__bucket").orderBy("res_key")
+        inserts = (
+            tagged.where(F.col("op") == OP_INSERT)
+            .withColumn(
+                "pk_id",
+                (F.row_number().over(w_bucket) + offset_col + F.lit(max_pk)).cast("int"),
             )
-            .unionByName(
-                deletes.select(
-                    "pk_id",
-                    F.lit("delete").alias("op"),
-                    F.lit(None).cast("string").alias("resource"),
+            .select("pk_id", "resource")
+        )
+        updates = tagged.where(F.col("op") == OP_UPDATE).select("resource", "pk_id")
+        deletes = tagged.where(F.col("op") == OP_DELETE).select("pk_id")
+        if not apply_deletes:
+            deletes = deletes.limit(0)
+
+        if strategy == "merge":
+            stage = f"{table}__stage"
+            staged = (
+                inserts.select("pk_id", F.lit("insert").alias("op"), "resource")
+                .unionByName(
+                    updates.select("pk_id", F.lit("update").alias("op"), "resource")
+                )
+                .unionByName(
+                    deletes.select(
+                        "pk_id",
+                        F.lit("delete").alias("op"),
+                        F.lit(None).cast("string").alias("resource"),
+                    )
                 )
             )
-        )
-        conn = connect_fn()
-        try:
-            cur = conn.cursor()
-            cur.execute(f"DROP TABLE IF EXISTS {stage}")  # noqa: S608
-            cur.execute(
-                f"CREATE TABLE {stage} (pk_id INT, op TEXT, resource TEXT)"  # noqa: S608
+            _driver_sql(
+                connect_fn,
+                f"DROP TABLE IF EXISTS {stage}",  # noqa: S608
+                f"CREATE TABLE {stage} (pk_id INT, op TEXT, resource TEXT)",  # noqa: S608
             )
-            conn.commit()
-        finally:
-            conn.close()
-        ph = "%s, %s, %s" if dialect == "pg" else "?, ?, ?"
-        jdbc_upsert.foreach_partition_write(
-            staged,
-            f"INSERT INTO {stage} (pk_id, op, resource) VALUES ({ph})",  # noqa: S608
-            connect_fn,
-            batch_size,
-        )
-        jdbc_upsert.merge_stage_into_target(
-            connect_fn, table, stage, dialect=dialect
-        )
-        conn = connect_fn()
-        try:
-            conn.cursor().execute(f"DROP TABLE IF EXISTS {stage}")  # noqa: S608
-            conn.commit()
-        finally:
-            conn.close()
-    else:
-        jdbc_upsert.apply_changeset(
-            inserts, updates, deletes, table, connect_fn, batch_size,
-            dialect=dialect,
-        )
+            ph = "%s, %s, %s" if dialect == "pg" else "?, ?, ?"
+            jdbc_upsert.foreach_partition_write(
+                staged,
+                f"INSERT INTO {stage} (pk_id, op, resource) VALUES ({ph})",  # noqa: S608
+                connect_fn,
+                batch_size,
+            )
+            jdbc_upsert.merge_stage_into_target(
+                connect_fn, table, stage, dialect=dialect
+            )
+            _driver_sql(connect_fn, f"DROP TABLE IF EXISTS {stage}")  # noqa: S608
+        else:
+            jdbc_upsert.apply_changeset(
+                inserts, updates, deletes, table, connect_fn, batch_size,
+                dialect=dialect,
+            )
 
-    conn = connect_fn()
-    try:
-        cur = conn.cursor()
-        cur.execute(f"SELECT COUNT(*) FROM {table}")  # noqa: S608
-        mirror_after = int(cur.fetchone()[0])
-    finally:
-        conn.close()
-    src_count = well_formed.count()
-    tagged.unpersist()
+        (mirror_after,) = _driver_sql(
+            connect_fn, f"SELECT COUNT(*) FROM {table}", fetch=True  # noqa: S608
+        )
     return SyncStats(
-        inserts=stats_rows.get(OP_INSERT, 0),
-        updates=stats_rows.get(OP_UPDATE, 0),
-        deletes=stats_rows.get(OP_DELETE, 0),
-        noops=stats_rows.get(OP_NOOP, 0),
+        inserts=op_counts[OP_INSERT],
+        updates=op_counts[OP_UPDATE],
+        deletes=op_counts[OP_DELETE],
+        noops=op_counts[OP_NOOP],
         malformed=n_malformed,
         source_count=src_count,
-        mirror_count_after=mirror_after,
+        mirror_count_after=int(mirror_after),
     )
+
+
+def _driver_sql(
+    connect_fn: Callable[[], object], *statements: str, fetch: bool = False
+) -> tuple | None:
+    """Run ``statements`` on one short-lived driver-side connection and
+    always close it. With ``fetch`` returns the last statement's first
+    row; otherwise commits."""
+    with closing(connect_fn()) as conn:
+        cur = conn.cursor()
+        for sql in statements:
+            cur.execute(sql)
+        if fetch:
+            return cur.fetchone()
+        conn.commit()
+        return None
 
 
 def run_sync(

@@ -132,6 +132,86 @@ def test_malformed_resources_skipped_not_fatal(spark, sqlite_db):
     assert stats.counts_match
 
 
+def _counted_source(spark, docs: list[dict]):
+    """A source whose every row read bumps an accumulator."""
+    reads = spark.sparkContext.accumulator(0)
+
+    def tap(resource):
+        reads.add(1)
+        return resource
+
+    src = spark.createDataFrame(
+        [(json.dumps(d, sort_keys=True),) for d in docs], "resource string"
+    ).select(F.udf(tap, "string").asNondeterministic()("resource").alias("resource"))
+    return src, reads
+
+
+@pytest.mark.parametrize(
+    "strategy,n_bad", [("batched", 0), ("merge", 0), ("batched", 3)]
+)
+def test_sync_reads_source_once(spark, sqlite_db, strategy, n_bad):
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    conn = sqlite_db()
+    conn.executemany(
+        "INSERT INTO patient (id, resource) VALUES (?, ?)",
+        [(i + 1, json.dumps(_resource(f"pat-{i}", 1))) for i in range(10)],
+    )
+    conn.commit()
+    conn.close()
+    docs = (
+        [_resource(f"pat-{i}", 1 + (i % 2)) for i in range(2, 10)]
+        + [_resource(f"pat-new-{i}", 1) for i in range(4)]
+        + [{"resourceType": "Patient", "id": f"bad-{i}"} for i in range(n_bad)]
+    )
+    src, reads = _counted_source(spark, docs)
+    stats = sync_resources(spark, src, sqlite_db, "patient", strategy=strategy)
+    assert reads.value == len(docs)
+    assert (stats.inserts, stats.updates, stats.deletes, stats.noops) == (4, 4, 2, 4)
+    assert stats.malformed == n_bad
+    assert stats.source_count == 12
+    assert stats.counts_match
+
+
+@pytest.mark.parametrize("via_mirror_df", [False, True])
+def test_unparseable_mirror_row_keeps_its_pk(spark, sqlite_db, via_mirror_df):
+    """An unparseable mirror row is skipped by the diff but its id is
+    taken: inserts must be allocated above it, or this sync and every
+    later one hits the primary key. Holds for the driver-fetched mirror
+    and for the ``mirror_df`` seam."""
+
+    def mirror_df():
+        if not via_mirror_df:
+            return None
+        conn = sqlite_db()
+        rows = conn.execute("SELECT id, resource FROM patient").fetchall()
+        conn.close()
+        return spark.createDataFrame(rows, "id int, resource string")
+
+    jdbc_upsert.create_mirror_tables(sqlite_db, ["patient"])
+    conn = sqlite_db()
+    conn.executemany(
+        "INSERT INTO patient (id, resource) VALUES (?, ?)",
+        [(i, json.dumps(_resource(f"p{i}", 1))) for i in (1, 2, 3)]
+        + [(4, "not json")],
+    )
+    conn.commit()
+    conn.close()
+    src = spark.createDataFrame(
+        [(json.dumps(_resource(f"p{i}", 1), sort_keys=True),) for i in range(1, 6)],
+        "resource string",
+    )
+    stats = sync_resources(spark, src, sqlite_db, "patient", mirror_df=mirror_df())
+    assert (stats.inserts, stats.noops, stats.deletes) == (2, 3, 0)
+    assert stats.mirror_count_after == 6  # the unparseable row stays
+    again = sync_resources(spark, src, sqlite_db, "patient", mirror_df=mirror_df())
+    assert (again.inserts, again.noops) == (0, 5)
+    conn = sqlite_db()
+    rows = dict(conn.execute("SELECT id, resource FROM patient").fetchall())
+    conn.close()
+    assert rows[4] == "not json"
+    assert sorted(json.loads(rows[pk])["id"] for pk in (5, 6)) == ["p4", "p5"]
+
+
 @pytest.mark.slow
 def test_run_sync_multi_type_bootstrap(spark, sqlite_db):
     srcs = {
@@ -528,9 +608,12 @@ def test_merge_failure_rolls_back_and_replay_converges(spark, sqlite_db):
     def failing_connect():
         return _FailOnTargetDelete(sqlite_db())
 
+    jsc = spark.sparkContext._jsc
+    pinned = jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match="injected"):
         sync_resources(spark, src2, failing_connect, "patient", strategy="merge")
     assert _snapshot() == before, "partial merge leaked through rollback"
+    assert jsc.getPersistentRDDs().size() == pinned, "failed sync left its pins cached"
 
     # replay with a healthy connection: full convergence
     stats = sync_resources(spark, src2, sqlite_db, "patient", strategy="merge")
