@@ -12,9 +12,10 @@ stored side enters the probe join with NO exchange
 (tests/test_frozen_probe.py pins it; the q_dedup_incremental /
 tests/test_bucketed_join.py posture) — and run the IDENTICAL
 candidate/verify/classify pipeline against the stored form: the
-probe paths import the registered queries' own candidate generators,
-they do not re-implement them, so probe-equals-registered is a code
-identity plus a pinned test, not a parallel implementation.
+probe paths call the registered queries' own candidate generators
+and classification tail from operators/dedup.py, they do not
+re-implement them, so probe-equals-registered is a code identity plus
+a pinned test, not a parallel implementation.
 
 Index contents per family:
 - setsim (Jaccard >= 1/2, word-5-gram): frozen token df stats
@@ -24,8 +25,8 @@ Index contents per family:
   threshold-free — one stats table serves both prefix families) +
   corpus FULL postings (__sid, doc_id): containment cannot
   prefix-prune the container side (JOSIE)
-- minhash (portable md5 construction): the stop-bucket-capped
-  (band, bkey, doc_id) band postings, bucketed by (band, bkey)
+- minhash (md5 shingle ids, string band keys): the stop-bucket-capped
+  (doc_id, band, bkey) band postings, bucketed by (band, bkey)
 
 tools/measure_probe.py times build and probe separately and SCALE.md
 carries the probe-only decade rows.
@@ -37,6 +38,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators import dedup
+from fhir2sql_spark.operators.dedup import (
+    _cap_bucket_postings,
+    _classify_new_batch,
+    _containment_inc_candidates,
+    _inc_prefix_postings,
+    _minhash_inc_candidates,
+    _setsim_inc_candidates,
+)
 
 
 def _sid_postings(docs: DataFrame, n: int = 5) -> DataFrame:
@@ -99,7 +108,7 @@ def batch_prefixes(
 ) -> DataFrame:
     """Batch-side rarity prefixes under the FROZEN order read from
     the STORED stats table — the probe-time counterpart of
-    queries/llm._inc_prefix_postings (which derives the same __df
+    dedup._inc_prefix_postings (which derives the same __df
     with an in-query window over the combined stream): tokens the
     index has never seen rank __df = 0 (rarest; they cannot hit the
     corpus index anyway but order batch-batch prefixes), and prefix
@@ -151,8 +160,6 @@ def build_setsim_prefix_index(
     (corpus-df, sid) order — EXACTLY the registered query's corpus
     slice: on a corpus-only input _inc_prefix_postings' conditional
     df window counts every row, so this IS the same code path."""
-    from fhir2sql_spark.queries.llm import _inc_prefix_postings
-
     return _inc_prefix_postings(
         corpus_docs,
         threshold_num=threshold_num,
@@ -212,15 +219,10 @@ def build_batch_posting_index(batch_docs: DataFrame, n: int = 5) -> DataFrame:
 
 
 def build_minhash_band_index(corpus_docs: DataFrame) -> DataFrame:
-    """Capped (band, bkey, doc_id) postings of the portable MinHash
-    construction — the registered query's own band/cap code."""
-    from fhir2sql_spark.queries.llm import (
-        _cap_bucket_postings,
-        _portable_band_postings,
-    )
-
+    """Capped band postings of q_dedup_minhash_inc's md5 construction
+    — the registered query's own band/cap code."""
     return _cap_bucket_postings(
-        _portable_band_postings(corpus_docs), "band", "bkey"
+        dedup.band_postings(corpus_docs, dedup.md5_sid, dedup.concat_band_key)
     )
 
 
@@ -238,7 +240,11 @@ def persist_index(
     ``mode="append"`` is the per-ingest-shard form: each shard's rows
     land in the same bucketed table (bucket files accumulate per
     append; Spark unions same-bucket files at read with the bucket
-    spec intact)."""
+    spec intact). Appended tables keep the bucketing (still no
+    exchange) but lose the sort guarantee: Spark honours sortBy only
+    when each bucket is one file, so a reader may sort again
+    (performance only; results are unaffected). Rewriting the table
+    with ``mode="overwrite"`` compacts it to one file per bucket."""
     (
         df.write.mode(mode)
         .bucketBy(buckets, *bucket_cols)
@@ -264,11 +270,6 @@ def setsim_probe(
     frozen order, the registered query's own candidate joins against
     the stored prefix index, exact verify + classify. ``docs`` is the
     full lake table (verification re-reads candidate texts)."""
-    from fhir2sql_spark.queries.llm import (
-        _classify_new_batch,
-        _setsim_inc_candidates,
-    )
-
     batch = docs.where(F.col("doc_id") % 3 == 0)
     bp = batch_prefixes(batch, stats, threshold_num, threshold_den, n)
     cand_corpus, cand_batch = _setsim_inc_candidates(bp, corpus_prefix)
@@ -292,11 +293,6 @@ def setsim_probe_stored(
     and the verify/classify tail are the registered query's own code;
     statuses equal the registered run and the window-deriving probe
     (tests/test_frozen_probe.py)."""
-    from fhir2sql_spark.queries.llm import (
-        _classify_new_batch,
-        _setsim_inc_candidates,
-    )
-
     cand_corpus, cand_batch = _setsim_inc_candidates(
         batch_prefix, corpus_prefix
     )
@@ -317,11 +313,6 @@ def containment_probe_stored(
     """Probe-only q_dedup_containment_inc with stored batch prefixes
     AND stored batch full postings (both per-ingest-shard artifacts —
     see build_batch_prefix_index / build_batch_posting_index)."""
-    from fhir2sql_spark.queries.llm import (
-        _classify_new_batch,
-        _containment_inc_candidates,
-    )
-
     cand_corpus, cand_batch = _containment_inc_candidates(
         batch_prefix,
         corpus_full.select(
@@ -352,11 +343,6 @@ def containment_probe(
 ) -> DataFrame:
     """Probe-only q_dedup_containment_inc against the stored full
     posting index."""
-    from fhir2sql_spark.queries.llm import (
-        _classify_new_batch,
-        _containment_inc_candidates,
-    )
-
     batch = docs.where(F.col("doc_id") % 3 == 0)
     bp = batch_prefixes(batch, stats, threshold_num, threshold_den, n)
     batch_full = _sid_postings(batch, n=n).select(
@@ -413,8 +399,6 @@ def containment_probe_positional(
     candidate fan-out BEFORE the pair distinct (tokens matched deep
     in a large container's tail can no longer certify containment);
     the index grows by 2 ints/posting."""
-    from fhir2sql_spark.queries.llm import _classify_new_batch
-
     batch = docs.where(F.col("doc_id") % 3 == 0)
     bp = batch_prefixes(
         batch, stats, threshold_num, threshold_den, n, positions=True
@@ -468,12 +452,8 @@ def minhash_probe(docs: DataFrame, band_index: DataFrame) -> DataFrame:
     """Probe-only q_dedup_minhash_inc against the stored capped band
     index: batch signatures + the registered query's candidate joins
     + exact verify/classify."""
-    from fhir2sql_spark.queries.llm import (
-        _classify_new_batch,
-        _minhash_inc_candidates,
-        _portable_band_postings,
+    nb = dedup.band_postings(
+        docs.where(F.col("doc_id") % 3 == 0), dedup.md5_sid, dedup.concat_band_key
     )
-
-    nb = _portable_band_postings(docs.where(F.col("doc_id") % 3 == 0))
     cand_corpus, cand_batch = _minhash_inc_candidates(nb, band_index)
     return _classify_new_batch(docs, cand_corpus, cand_batch)

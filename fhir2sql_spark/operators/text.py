@@ -1040,7 +1040,9 @@ def viterbi_best_bits(
                 "viterbi_best_bits: piece length outside piece_lens "
                 f"{tuple(plens)}: {p!r}"
             )
-        wgt[p] = int(r["wgt"])
+        # a piece listed twice keeps its largest weight
+        w = int(r["wgt"])
+        wgt[p] = max(wgt.get(p, w), w)
 
     def vit(it):
         for pdf in it:

@@ -7,11 +7,12 @@ exact variants carry DuckDB oracles. Round 5 closed most of the
 verification gap on the probabilistic scale paths: the hyperplane-ANN
 and IVF searches and the BLAS bulk dedup are now exactly oracled
 (seeded literals / deterministic codebooks / tested rounding margins),
-and the MinHash-LSH and SimHash pipelines are exact-gated through
-md5-based portable twins that replay banding end to end. Only the
-xxhash64 twins themselves (engine-specific hash) and the trained-IVF
-codebook (iterative k-means) remain rows-only, each recall-tested
-against its exact counterpart in tests/test_llm_ops.py.
+and the MinHash-LSH and SimHash pipelines (operators/dedup.py, one
+per algorithm) are exact-gated by registering each with the md5 hash
+that a SQL oracle can replay end to end. The same pipelines
+registered with xxhash64 (engine-specific) are the only rows-only
+queries here; tests/test_dedup_lsh.py checks their recall and status
+equality against the md5 runs.
 """
 
 from __future__ import annotations
@@ -20,6 +21,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators import dedup, similarity, text as text_ops
+from fhir2sql_spark.operators.dedup import (
+    _classify_new_batch,
+    _containment_inc_candidates,
+    _inc_prefix_postings,
+    _setsim_inc_candidates,
+)
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 from fhir2sql_spark.queries.util import exact_div
@@ -186,77 +193,6 @@ _5GRAM_SQL = """
 """
 
 
-def _inc_prefix_postings(
-    docs: DataFrame,
-    threshold_num: int,
-    threshold_den: int,
-    n: int,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """Shared prologue of the r9 incremental prefix-filter dedups:
-    per-doc rarity-ordered prefixes under the FROZEN corpus token
-    order.
-
-    The stored index's total order is (corpus document frequency,
-    sid): df here is counted over the corpus shard ONLY — a
-    conditional count over the same sid window setsim_pairs uses, so
-    in one pass every token (corpus AND batch rows) carries the
-    frozen statistic, and tokens the index has never seen rank df=0
-    (rarest — they cannot hit the corpus index anyway, but order
-    batch-batch prefixes). Prefix completeness holds under ANY fixed
-    total order (Bayardo et al.'s theorem never uses rarity, only
-    consistency), which is what makes the frozen order sound: rarity
-    only buys selectivity, and a STALE rarity profile degrades speed,
-    never recall — the drift monitor (q_diag_codebook_drift's role
-    for the semantic index) tells you when to re-rank.
-
-    Completeness is in SID space (ADVICE r9): |S| and prefix lengths
-    are counted over xxhash64-distinct shingle ids while verification
-    counts raw shingle strings, so the no-recall-caveat claim holds
-    modulo a within-doc 64-bit hash collision (~2^-64 per shingle
-    pair — negligible; a collision can only SHORTEN a prefix).
-
-    Plan: the same 2-big-exchange linear pipeline as setsim_pairs
-    (one explicit sid exchange shared by the distinct aggregate and
-    the df window, one doc_id exchange for the size+prefix windows);
-    only the prefix slice is checkpointed — it is the stored-index
-    stand-in, read once as the corpus side and twice as the batch
-    probe."""
-    sh = (
-        dedup.shingles(docs, n=n, distinct=False)
-        .select("doc_id", F.xxhash64("lang", "shingle").alias("__sid"))
-        .repartition(F.col("__sid"))
-        .groupBy("__sid", "doc_id")
-        .agg(F.lit(1))
-        .select("doc_id", "__sid")
-    )
-    toks = sh.withColumn(
-        "__df",
-        F.count(F.when(F.col("doc_id") % 3 != 0, F.lit(1))).over(
-            Window.partitionBy("__sid")
-        ),
-    )
-    w = Window.partitionBy("doc_id").orderBy("__df", "__sid")
-    w_size = Window.partitionBy("doc_id")
-    prefix_len = (
-        F.col("__s")
-        - F.expr(
-            f"(__s * {threshold_num} + {threshold_den} - 1) "
-            f"div {threshold_den}"
-        )
-        + 1
-    )
-    pref = (
-        toks.withColumn("__s", F.count(F.lit(1)).over(w_size))
-        .withColumn("__pos", F.row_number().over(w))
-        .where(F.col("__pos") <= prefix_len)
-        .select("doc_id", "__sid")
-    )
-    # checkpoint=False exists ONLY so tests can read the pre-barrier
-    # plan (the 2-exchange pin); every query path checkpoints
-    return pref.localCheckpoint(eager=True) if checkpoint else pref
-
-
 @query(
     "q_dedup_setsim_inc",
     oracle=_5GRAM_SQL
@@ -308,39 +244,6 @@ def q_dedup_setsim_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _classify_new_batch(
         docs, cand_corpus, cand_batch, threshold_num=1, threshold_den=2, n=5
     )
-
-
-def _setsim_inc_candidates(
-    batch_pref: DataFrame, corpus_pref: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Candidate generation of the incremental set-similarity dedup,
-    factored so the registered query (in-query index rebuild) and the
-    STORED-index probe path (operators/frozen_index.py, VERDICT r9
-    #2) run the identical joins: batch prefixes vs corpus prefix
-    postings on the token sid, plus the within-batch prefix
-    self-join under the min-id order."""
-    pb = batch_pref.select("__sid", F.col("doc_id").alias("doc_a"))
-    pc = corpus_pref.select(
-        F.col("__sid").alias("__sid_b"), F.col("doc_id").alias("doc_b")
-    )
-    bb = batch_pref.select(
-        F.col("__sid").alias("__sid_b"), F.col("doc_id").alias("doc_b")
-    )
-    cand_corpus = (
-        pb.join(pc, F.col("__sid") == F.col("__sid_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    cand_batch = (
-        pb.join(
-            bb,
-            (F.col("__sid") == F.col("__sid_b"))
-            & (F.col("doc_b") < F.col("doc_a")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return cand_corpus, cand_batch
 
 
 @query(
@@ -408,81 +311,28 @@ def q_dedup_containment_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _containment_inc_candidates(
-    batch_pref: DataFrame,
-    corpus_full: DataFrame,
-    batch_full: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Candidate generation of the incremental containment dedup,
-    factored for the stored-index probe path (VERDICT r9 #2): the
-    prefix-pruned batch side probes the corpus FULL posting index and
-    the batch's own full postings (min-id order). ``corpus_full`` /
-    ``batch_full`` carry (__sid_b, doc_b)."""
-    pb = batch_pref.select("__sid", F.col("doc_id").alias("doc_a"))
-    cand_corpus = (
-        pb.join(corpus_full, F.col("__sid") == F.col("__sid_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    cand_batch = (
-        pb.join(
-            batch_full,
-            (F.col("__sid") == F.col("__sid_b"))
-            & (F.col("doc_b") < F.col("doc_a")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return cand_corpus, cand_batch
-
-
-@query("q_dedup_minhash")  # probabilistic: rows-only; recall vs exact in tests
+@query("q_dedup_minhash")  # engine-specific hash: rows-only
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(32 perms, seed 42) + 8x4 banding -> candidate pairs ->
-    exact Jaccard verification on candidates only. Same output contract
-    as q_dedup_near but O(docs x bands) instead of O(shingle pairs) —
-    the 100 TB path."""
-    docs = load(spark, sf_dir, "documents")
-    sigs = dedup.minhash_signatures(docs, num_hashes=32, seed=42)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=8, rows_per_band=4)
-    return dedup.verify_candidate_pairs(
-        docs, cands, threshold_num=4, threshold_den=5
+    """``dedup.minhash_pairs`` with xxhash64 shingle ids and 8-byte
+    xxhash64 band keys — the scale path of q_dedup_minhash_portable,
+    whose oracle checks the shared pipeline."""
+    return dedup.minhash_pairs(
+        load(spark, sf_dir, "documents"), dedup.xxhash_sid, dedup.xxhash_band_key
     )
-
-
-#: 31-bit Mersenne modulus of the portable MinHash permutation family
-#: — the SAME modulus the xxhash64 scale path uses
-#: (operators/dedup.py:_P), so the two twins differ ONLY in the base
-#: hash (md5 hex-parse vs xxhash64) and the band-key encoding.
-_P31 = (1 << 31) - 1
 
 
 def _portable_perm_sql() -> str:
-    """The (p, a, b) permutation table as a SQL VALUES literal —
-    the identical constants `_minhash_params(32, 42)` feeds the
-    xxhash64 scale path, embedded in the oracle text so both engines
-    run the same affine family h_p(x) = (a*x + b) mod (2^31 - 1)."""
-    from fhir2sql_spark.operators.dedup import _minhash_params
-
+    """The (p, a, b) permutation table as a SQL VALUES literal — the
+    constants ``dedup.band_postings`` uses, embedded in the oracle text
+    so both engines run the same affine family
+    h_p(x) = (a*x + b) mod (2^31 - 1)."""
     rows = ", ".join(
         f"({p}, {a}, {b})"
-        for p, (a, b) in enumerate(_minhash_params(32, 42))
+        for p, (a, b) in enumerate(
+            dedup._minhash_params(dedup._NUM_HASHES, dedup._SEED)
+        )
     )
     return f"(VALUES {rows}) AS prm(p, a, b)"
-
-
-def _portable_sid() -> "F.Column":
-    """Portable 31-bit shingle id: the first 15 hex chars of
-    md5(shingle) parsed as an integer, mod 2^31 - 1. Both engines
-    compute md5 and the hex parse identically (pinned equal:
-    Spark conv(.,16,10) == DuckDB CAST('0x'||. AS BIGINT)), so ONE
-    md5 per (doc, shingle) row replaces the 32-md5s-per-row of the
-    round-5 construction — measured ~3x cheaper at sf0.1 and the
-    difference compounds at the sf100 decade."""
-    return F.pmod(
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long"),
-        F.lit(_P31),
-    )
 
 
 _PORTABLE_SIG_SQL = """
@@ -547,126 +397,22 @@ _PORTABLE_SIG_SQL = """
     """,
 )
 def q_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verification twin of q_dedup_minhash (round 5; construction
-    revised round 9): the SAME MinHash+LSH pipeline — 32 affine
-    permutations (a*x + b) mod (2^31 - 1) with the IDENTICAL (a, b)
-    constants and modulus as the xxhash64 scale path, 8x4 banding,
-    candidate equi-join, exact-Jaccard verify — differing from the
-    scale path ONLY in the base hash: shingle ids come from an
-    md5-hex-parse both engines compute bit-identically, so the oracle
-    replicates the ENTIRE pipeline including which pairs collide in
-    which band — the candidate set, not just the verified output, is
-    hash-checked. (The round-5 form spent 32 md5s per (doc, shingle)
-    row; one md5 + 32 integer ops is ~3x cheaper at sf0.1 and was the
-    #1 suite-time line item in the r9 idle-host baseline.) The
-    registered scale path stays on xxhash64 (8-byte folded band keys
-    vs the decimal-string keys here); this twin pins its algorithm,
-    the recall tests in tests/test_llm_ops.py pin their
-    equivalence."""
-    docs = load(spark, sf_dir, "documents")
-    sh = dedup.shingles(docs, n=3, distinct=True).withColumn(
-        "__sid", _portable_sid()
-    )
-    from fhir2sql_spark.operators.dedup import _minhash_params
-
-    mins = [
-        F.min((F.col("__sid") * F.lit(a) + F.lit(b)) % F.lit(_P31)).alias(
-            f"h{i}"
-        )
-        for i, (a, b) in enumerate(_minhash_params(32, 42))
-    ]
-    sig = sh.groupBy("doc_id", "lang").agg(*mins)
-    banded = sig.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"h{i}").cast("string")
-                                for i in range(b * 4, b * 4 + 4)
-                            ],
-                        ).alias("bkey"),
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("s"),
-    ).select("doc_id", "lang", "s.band", "s.bkey")
-    a = banded.select(
-        "lang", "band", "bkey", F.col("doc_id").alias("doc_a")
-    )
-    b = banded.select(
-        F.col("lang").alias("lang_b"),
-        F.col("band").alias("band_b"),
-        F.col("bkey").alias("bkey_b"),
-        F.col("doc_id").alias("doc_b"),
-    )
-    cands = (
-        a.join(
-            b,
-            (a.lang == b.lang_b)
-            & (a.band == b.band_b)
-            & (a.bkey == b.bkey_b)
-            & (a.doc_a < b.doc_b),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return dedup.verify_candidate_pairs(
-        docs, cands, threshold_num=4, threshold_den=5
+    """``dedup.minhash_pairs`` with md5 shingle ids and decimal-string
+    band keys, both of which DuckDB computes identically: the oracle
+    replays the whole pipeline, candidate set included."""
+    return dedup.minhash_pairs(
+        load(spark, sf_dir, "documents"), dedup.md5_sid, dedup.concat_band_key
     )
 
 
 @query("q_dedup_simhash")  # engine-specific hash: rows-only
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """63-bit SimHash per document + near-pair candidates at Hamming
-    distance <= 3, via 4-segment pigeonhole banding (any pair within
-    distance 3 shares >=1 exact 16-bit segment) — equi-join shape,
-    never all-pairs."""
-    docs = load(spark, sf_dir, "documents")
-    sh = dedup.simhash(docs)
-    seg = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("seg_no"),
-                        F.shiftright(F.col("simhash"), i * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("seg"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("s"),
-    ).select("doc_id", "simhash", "s.seg_no", "s.seg")
-    a = seg.select(
-        "seg_no", "seg", F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a")
+    """``dedup.simhash_pairs`` on a 63-bit xxhash64 SimHash in 4x16-bit
+    segments — the scale path of q_dedup_simhash_portable, whose
+    oracle checks the shared pipeline."""
+    return dedup.simhash_pairs(
+        load(spark, sf_dir, "documents"), F.xxhash64, bits=64, seg_bits=16
     )
-    b = seg.select(
-        F.col("seg_no").alias("seg_no_b"),
-        F.col("seg").alias("seg_b"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sh_b"),
-    )
-    pairs = (
-        a.join(
-            b,
-            (a.seg_no == b.seg_no_b) & (a.seg == b.seg_b) & (a.doc_a < b.doc_b),
-        )
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .where(F.col("hamming") <= 3)
-    )
-    return pairs.select("doc_a", "doc_b", "hamming")
 
 
 def _simhash_portable_oracle() -> str:
@@ -722,66 +468,14 @@ def _simhash_portable_oracle() -> str:
 
 @query("q_dedup_simhash_portable", oracle=_simhash_portable_oracle())
 def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verification twin of q_dedup_simhash (round 5): identical
-    SimHash pipeline — per-bit majority vote over word features,
-    pigeonhole banding, bit_count(xor) Hamming <= 3 — on a 60-bit
-    hash both engines compute identically: the first 15 hex digits of
-    md5(token) as an integer (Spark conv(substr(md5),16,10); DuckDB
-    positional nibble arithmetic — same value by construction). Every
-    stage is exact integer math, so the oracle checks the ENTIRE
-    pipeline including which pairs collide in which segment,
-    graduating the SimHash family from rows-only to an exact external
-    gate. The registered scale path stays on xxhash64 (one JVM
-    intrinsic vs md5+conv per token); this twin pins the algorithm.
-
-    Segments here are 4x15 bits (60-bit hash) vs the scale path's
-    4x16 (63-bit) — the pigeonhole guarantee (Hamming <= 3 implies
-    >= 1 equal segment) holds identically."""
-    md5_60 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast(  # noqa: E731
-        "long"
+    """``dedup.simhash_pairs`` on the 60-bit ``md5_60`` token hash in
+    4x15-bit segments, which DuckDB computes identically: the oracle
+    replays the whole pipeline, segment collisions included.
+    bits=61 because the pack skips the top bit, leaving exactly the 60
+    real ones."""
+    return dedup.simhash_pairs(
+        load(spark, sf_dir, "documents"), dedup.md5_60, bits=61, seg_bits=15
     )
-    docs = load(spark, sf_dir, "documents")
-    # bits=61: the hash has 60 significant bits, so bit 60's majority
-    # is the constant -count vote and the pack (range(bits-1) = 0..59)
-    # emits exactly the 60 real bits.
-    sh = dedup.simhash(docs, bits=61, hash_fn=md5_60)
-    seg = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("seg_no"),
-                        F.shiftright(F.col("simhash"), i * 15)
-                        .bitwiseAND(F.lit(0x7FFF))
-                        .alias("seg"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("s"),
-    ).select("doc_id", "simhash", "s.seg_no", "s.seg")
-    a = seg.select(
-        "seg_no", "seg", F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a")
-    )
-    b = seg.select(
-        F.col("seg_no").alias("seg_no_b"),
-        F.col("seg").alias("seg_b"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sh_b"),
-    )
-    pairs = (
-        a.join(
-            b,
-            (a.seg_no == b.seg_no_b) & (a.seg == b.seg_b) & (a.doc_a < b.doc_b),
-        )
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .where(F.col("hamming") <= 3)
-    )
-    return pairs.select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
 
 
 @query(
@@ -2411,284 +2105,20 @@ def q_embed_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_minhash_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental MinHash-LSH near-dedup against a FROZEN band index
-    — the last member of the per-ingest dedup family (exact:
-    q_dedup_incremental, semantic: q_dedup_semantic_inc, fingerprint:
-    q_dedup_winnow_inc; VERDICT r7 noted the pairwise-LSH gap). The
-    stored corpus index holds each document's 8 LSH band keys (32
-    affine permutations over md5-hex-parsed 31-bit shingle ids, 8x4
-    banding — the q_dedup_minhash_portable construction, so the WHOLE
-    pipeline including band collisions replays exactly in SQL) plus
-    its shingle sets for verification.
-    Per ingest, the NEW batch (doc_id % 3 = 0) computes signatures,
-    probes the band index with a hash equi-join, exact-Jaccard-verifies
-    only the collided pairs (>= 4/5), and classifies every batch doc:
-    'dup_corpus' (verified match in the index), 'dup_batch' (verified
-    match to a SMALLER-id batch doc — the min-id keeper rule), or
-    'new' (admit + append bands to the index).
-
-    Scale shape: per-ingest cost is O(batch signatures + collisions) —
-    the corpus is touched only through the (band, bkey) equi-join and
-    the verification semi-join, both probe-sized; stored bucketed by
-    (band, bkey) the index read is exchange-free (the
-    q_dedup_incremental posture, tests/test_bucketed_join.py). Band
-    keys concatenate 4 permutation values whose base is an md5 hex
-    parse: uniform, unskewable shuffle keys — but hash uniformity
-    only defends against HASH skew; TRUE
-    duplication (a boilerplate mega-cluster) still piles n docs into
-    one bucket, so both posting sides are stop-bucket-capped at
-    _INC_BUCKET_CAP min-ids per (band, bkey) before the probe (the
-    winnow max_df lesson, VERDICT r8 #2; the cap is replayed in the
-    SQL oracle's bands_r CTE and the planted mega-cluster test is
-    tests/test_round9_ops.py). Recall contract under the cap:
-    statuses are preserved for true-duplicate mega-clusters; residual
-    recall loss is possible in collision-polluted buckets (see the
-    _INC_BUCKET_CAP note). The scale variant swaps md5 for
-    xxhash64 exactly as q_dedup_minhash does vs its portable twin;
-    recall equivalence is pinned in tests/test_llm_ops.py."""
-    docs = load(spark, sf_dir, "documents")
-    banded = _portable_band_postings(docs)
-    nb = banded.where(F.col("doc_id") % 3 == 0)  # new-batch probe side
-    # frozen band index, stop-bucket-capped (VERDICT r8 #2): at most
-    # _INC_BUCKET_CAP postings per (band, bkey) per side survive —
-    # the index stores min-id postings, the batch probe side is
-    # capped the same way before it plays doc_b
-    idx = _cap_bucket_postings(
-        banded.where(F.col("doc_id") % 3 != 0), "band", "bkey"
-    )
-    cand_corpus, cand_batch = _minhash_inc_candidates(nb, idx)
-    return _classify_new_batch(docs, cand_corpus, cand_batch)
-
-
-def _portable_band_postings(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, bkey) LSH band postings under the PORTABLE
-    construction (md5 hex-parse sid + the shared affine family, 8x4
-    banding) — the exact band index q_dedup_minhash_inc stores;
-    factored for the stored-index probe path (VERDICT r9 #2)."""
-    from fhir2sql_spark.operators.dedup import _minhash_params
-
-    sh = dedup.shingles(docs, n=3, distinct=True).withColumn(
-        "__sid", _portable_sid()
-    )
-    mins = [
-        F.min((F.col("__sid") * F.lit(a) + F.lit(b)) % F.lit(_P31)).alias(
-            f"h{i}"
-        )
-        for i, (a, b) in enumerate(_minhash_params(32, 42))
-    ]
-    sig = sh.groupBy("doc_id").agg(*mins)
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"h{i}").cast("string")
-                                for i in range(b * 4, b * 4 + 4)
-                            ],
-                        ).alias("bkey"),
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("s"),
-    ).select("doc_id", "s.band", "s.bkey")
-
-
-def _minhash_inc_candidates(
-    nb: DataFrame, idx: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Band-collision candidates of the incremental MinHash dedup:
-    the UNCAPPED batch side probes the (already capped) stored index
-    plus its own capped postings. Factored for the stored-index probe
-    path (VERDICT r9 #2)."""
-    nb_post = _cap_bucket_postings(nb, "band", "bkey")
-    a = nb.select("band", "bkey", F.col("doc_id").alias("doc_a"))
-    cand_corpus = (
-        a.join(
-            idx.select(
-                F.col("band").alias("band_b"),
-                F.col("bkey").alias("bkey_b"),
-                F.col("doc_id").alias("doc_b"),
-            ),
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bkey") == F.col("bkey_b")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    cand_batch = (
-        a.join(
-            nb_post.select(
-                F.col("band").alias("band_b"),
-                F.col("bkey").alias("bkey_b"),
-                F.col("doc_id").alias("doc_b"),
-            ),
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bkey") == F.col("bkey_b"))
-            & (F.col("doc_b") < F.col("doc_a")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return cand_corpus, cand_batch
-
-
-#: Per-(band-bucket, side) posting cap for the incremental LSH probes
-#: (VERDICT r8 #2 — the winnow max_df lesson applied to band buckets).
-#: A boilerplate mega-cluster puts n docs into ONE (band, bkey)
-#: bucket; uncapped, a probe against it fans out n_batch x n_index
-#: candidate rows before the distinct. Keeping only the BUCKET_CAP
-#: smallest doc_ids per bucket per side bounds candidate fan-out at
-#: O(batch x bands x cap) regardless of true duplication. Statuses
-#: are preserved for TRUE-duplicate mega-clusters (every kept posting
-#: is a mutual near-dup of the dropped ones — planted-cluster test in
-#: tests/test_round9_ops.py); in a COLLISION-polluted bucket (band
-#: agreement without true similarity padding the 64 slots) a batch
-#: doc whose sole true near-dup ranks past the cap flips to 'new' —
-#: residual recall loss, the same caveat class as LSH banding itself
-#: (ADVICE r9). Oracle parity is unaffected: the cap is replayed
-#: exactly in the md5 twin's SQL oracle via ROW_NUMBER() OVER
-#: (PARTITION BY band, bkey, side).
-_INC_BUCKET_CAP = 64
-
-
-def _cap_bucket_postings(banded: DataFrame, *keys: str) -> DataFrame:
-    """Keep the _INC_BUCKET_CAP smallest doc_ids per bucket.
-
-    ``keys`` are the bucket columns ((band, bkey) for the md5 form,
-    (bkey,) for the xxhash64 form); callers apply it per SIDE (index /
-    batch) so the rank is deterministic and SQL-replayable. The window
-    shuffles on the same key the probe join uses, so at scale it rides
-    the exchange the join needs anyway."""
-    w = Window.partitionBy(*keys).orderBy("doc_id")
-    return (
-        banded.withColumn("__pr", F.row_number().over(w))
-        .where(F.col("__pr") <= _INC_BUCKET_CAP)
-        .drop("__pr")
-    )
-
-
-def _classify_new_batch(
-    docs: DataFrame,
-    cand_corpus: DataFrame,
-    cand_batch: DataFrame,
-    threshold_num: int = 4,
-    threshold_den: int = 5,
-    n: int = 3,
-    containment: bool = False,
-) -> DataFrame:
-    """Shared tail of the incremental pairwise dedups (MinHash r8,
-    set-similarity r9 — each passes its own Jaccard threshold and
-    shingle width): exact-Jaccard
-    verify the (doc_a = batch, doc_b) candidates, then classify every
-    batch doc in ONE flags rollup — referencing the verified list
-    twice would re-execute the whole verify pipeline (2 corpus shingle
-    passes) per reference.
-
-    The flags join is a PLAIN doc_id equi-join on purpose (VERDICT r8
-    #1): flags holds one row per batch doc with a verified collision —
-    O(batch x dup-rate), not O(constant) — so a forced broadcast would
-    grow with the ingest straight into the 8 GB broadcast ceiling on a
-    dup-heavy crawl. AQE still elects a broadcast when flags is
-    genuinely small (the fixture case); with elective broadcasts
-    disabled it degrades to a probe-sized shuffle, never a
-    driver-sized build map (pinned in tests/test_round9_ops.py) —
-    the same discipline q_dedup_incremental's classification uses."""
-    ver = dedup.verify_candidate_pairs(
-        docs,
-        cand_corpus.unionByName(cand_batch),
-        threshold_num,
-        threshold_den,
-        n=n,
-        containment=containment,
-    )
-    flags = ver.groupBy(F.col("doc_a").alias("doc_id")).agg(
-        F.max((F.col("doc_b") % 3 != 0).cast("int")).alias("hit_corpus"),
-        F.max((F.col("doc_b") % 3 == 0).cast("int")).alias("hit_batch"),
-    )
-    return (
-        docs.where(F.col("doc_id") % 3 == 0)
-        .select("doc_id")
-        .join(flags, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("hit_corpus") == 1, F.lit("dup_corpus"))
-            .when(F.col("hit_batch") == 1, F.lit("dup_batch"))
-            .otherwise(F.lit("new"))
-            .alias("status"),
-        )
+    """Incremental MinHash-LSH near-dedup against a frozen band index
+    (``dedup.minhash_inc_statuses``), md5 twin: md5 shingle ids and
+    decimal-string band keys, so the oracle replays the whole
+    pipeline, the 64-posting bucket cap included (its bands_r CTE)."""
+    return dedup.minhash_inc_statuses(
+        load(spark, sf_dir, "documents"), dedup.md5_sid, dedup.concat_band_key
     )
 
 
 @query("q_dedup_minhash_inc_fast")  # engine-specific hash: rows-only
 def q_dedup_minhash_inc_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The xxhash64 SCALE PATH of q_dedup_minhash_inc — the same
-    relationship q_dedup_minhash bears to q_dedup_minhash_portable:
-    identical pipeline (32 permutations, 8x4 banding, frozen band
-    index probe, exact-Jaccard verify, dup_corpus / dup_batch / new
-    with the min-id keeper), but signatures come from the JVM-side
-    (a*xxhash64+b) mod P family and each band folds to ONE 8-byte
-    xxhash64 key instead of a 128-char md5 concatenation — ~3x
-    cheaper to compute and 16x lighter to shuffle/store in the index
-    (round-8 decade rows in SCALE.md). xxhash64 is engine-specific,
-    so this is a declared rows-only query; its ALGORITHM is
-    exact-gated through the md5 twin, and status equality on the
-    fixture is pinned in tests/test_round8_ops.py. Unlike
-    lsh_candidate_pairs' per-lang banding, the band key here is
-    language-agnostic to match the twin's contract."""
-    docs = load(spark, sf_dir, "documents")
-    sig = dedup.minhash_signatures(docs, num_hashes=32, seed=42)
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.col("signature").getItem(i)
-                            for i in range(b * 4, (b + 1) * 4)
-                        ],
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("bkey"),
+    """``dedup.minhash_inc_statuses`` with xxhash64 shingle ids and
+    8-byte xxhash64 band keys — the scale path of
+    q_dedup_minhash_inc, whose oracle checks the shared pipeline."""
+    return dedup.minhash_inc_statuses(
+        load(spark, sf_dir, "documents"), dedup.xxhash_sid, dedup.xxhash_band_key
     )
-    nb = banded.where(F.col("doc_id") % 3 == 0)
-    # same stop-bucket cap as the md5 twin — the folded xxhash64 key
-    # IS the bucket here, so the cap partitions on (bkey,) alone
-    idx = _cap_bucket_postings(
-        banded.where(F.col("doc_id") % 3 != 0), "bkey"
-    )
-    nb_post = _cap_bucket_postings(nb, "bkey")
-    a = nb.select("bkey", F.col("doc_id").alias("doc_a"))
-    cand_corpus = (
-        a.join(
-            idx.select(
-                F.col("bkey").alias("bkey_b"),
-                F.col("doc_id").alias("doc_b"),
-            ),
-            F.col("bkey") == F.col("bkey_b"),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    cand_batch = (
-        a.join(
-            nb_post.select(
-                F.col("bkey").alias("bkey_b"),
-                F.col("doc_id").alias("doc_b"),
-            ),
-            (F.col("bkey") == F.col("bkey_b"))
-            & (F.col("doc_b") < F.col("doc_a")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _classify_new_batch(docs, cand_corpus, cand_batch)

@@ -1,5 +1,6 @@
-"""LLM-operator semantics tests: LSH recall vs exact twins, simhash
-properties, multimodal plumbing (SURVEY §7 M6)."""
+"""LLM-operator semantics tests: substring dedup, ANN recall,
+multimodal plumbing (SURVEY §7 M6). The MinHash-LSH and SimHash
+tests live in tests/test_dedup_lsh.py."""
 
 from __future__ import annotations
 
@@ -9,23 +10,6 @@ from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators import dedup, multimodal, similarity
 from fhir2sql_spark.tables import load
-
-
-def test_minhash_lsh_recall_vs_exact(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    exact = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.jaccard_pairs(docs, 4, 5).collect()
-    }
-    sigs = dedup.minhash_signatures(docs, num_hashes=32, seed=42)
-    cands = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.lsh_candidate_pairs(sigs, bands=8, rows_per_band=4).collect()
-    }
-    if exact:
-        recall = len(exact & cands) / len(exact)
-        # jac>=0.8 pairs collide in >=1 of 8 bands w.p. ~1-(1-0.8^4)^8 ≈ 0.985
-        assert recall >= 0.75, f"LSH recall {recall} too low; {exact - cands}"
 
 
 def test_token_windows_positions_and_counts(spark):
@@ -115,33 +99,6 @@ def test_substring_cut_invariants(spark, sf_dir):
             assert r["clean_text"] == " ".join(docs[r["doc_id"]].split(" "))
         else:
             assert len(r["clean_text"].split(" ")) <= r["n_tokens"] - r["n_cut"] + 1
-
-
-def test_minhash_signature_deterministic(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").limit(20)
-    s1 = dedup.minhash_signatures(docs, num_hashes=8, seed=42).collect()
-    s2 = dedup.minhash_signatures(docs, num_hashes=8, seed=42).collect()
-    assert {r["doc_id"]: r["signature"] for r in s1} == {
-        r["doc_id"]: r["signature"] for r in s2
-    }
-    s3 = dedup.minhash_signatures(docs, num_hashes=8, seed=7).collect()
-    assert {r["doc_id"]: r["signature"] for r in s1} != {
-        r["doc_id"]: r["signature"] for r in s3
-    }
-
-
-@pytest.mark.slow
-def test_simhash_near_duplicates_close(spark):
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again", "en"),
-        (2, "the quick brown fox jumps over the lazy dog again and once", "en"),
-        (3, "completely unrelated text about spark shuffle partitions here", "en"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    sh = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
-    near = bin(sh[1] ^ sh[2]).count("1")
-    far = bin(sh[1] ^ sh[3]).count("1")
-    assert near < far
 
 
 def test_ann_recall_vs_exact_topk(spark, sf_dir):

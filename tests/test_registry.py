@@ -19,6 +19,38 @@ def test_oracle_keys_subset_of_queries():
     assert set(registry.ORACLE) <= set(registry.QUERIES)
 
 
+#: Each rows-only query (an engine-specific hash) -> the oracle-checked
+#: query that runs the same dedup operator with a portable hash.
+ORACLED_TWIN = {
+    "q_dedup_minhash": "q_dedup_minhash_portable",
+    "q_dedup_simhash": "q_dedup_simhash_portable",
+    "q_dedup_minhash_inc_fast": "q_dedup_minhash_inc",
+}
+
+
+def test_every_query_is_oracled_or_shares_an_oracled_pipeline():
+    """A query without an oracle must be the hash-injected twin of an
+    oracled query: both call the same operators/dedup.py pipeline, so
+    the oracle checks everything but the hash. A new rows-only query
+    fails here until it gets an oracle or a twin."""
+    from fhir2sql_spark.operators import dedup
+
+    assert set(registry.QUERIES) - set(registry.ORACLE) == set(ORACLED_TWIN)
+    pipelines = {
+        name
+        for name, fn in vars(dedup).items()
+        if callable(fn) and getattr(fn, "__module__", None) == dedup.__name__
+    }
+    for rows_only, twin in ORACLED_TWIN.items():
+        assert twin in registry.ORACLE
+        shared = (
+            set(registry.QUERIES[rows_only].__code__.co_names)
+            & set(registry.QUERIES[twin].__code__.co_names)
+            & pipelines
+        )
+        assert shared, (rows_only, twin)
+
+
 @pytest.mark.parametrize("name", sorted(registry.QUERIES))
 def test_query_runs_and_has_rows(name, spark, sf_dir):
     df = registry.QUERIES[name](spark, sf_dir)

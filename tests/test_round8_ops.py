@@ -1,8 +1,9 @@
 """Round-8 operator invariants: CCNet paragraph dedup, prototype
-pruning, SQ8 quantized search, incremental MinHash dedup. Exact
-end-to-end parity for all four runs in test_oracle_parity (sf0.001)
-and tools/drivercheck.py (sf0.01); these pin the semantic invariants
-the oracles alone would not explain."""
+pruning, SQ8 quantized search (the incremental MinHash dedup tests
+live in tests/test_dedup_lsh.py). Exact end-to-end parity for all
+three runs in test_oracle_parity (sf0.001) and tools/drivercheck.py
+(sf0.01); these pin the semantic invariants the oracles alone would
+not explain."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from fhir2sql_spark import registry
-from fhir2sql_spark.operators import dedup
 from fhir2sql_spark.tables import load
 
 registry.load_all()
@@ -91,75 +91,3 @@ def test_embed_sq_topk_recall_vs_float_l2(spark, sf_dir):
         total += 5
     # 8-bit quantization at dim 64 barely perturbs the ranking
     assert hits / total >= 0.8
-
-
-def test_minhash_inc_statuses_are_sound(spark, sf_dir):
-    out = {
-        r["doc_id"]: r["status"]
-        for r in registry.QUERIES["q_dedup_minhash_inc"](
-            spark, sf_dir
-        ).collect()
-    }
-    docs = load(spark, sf_dir, "documents")
-    new_ids = {
-        r["doc_id"]
-        for r in docs.where(F.col("doc_id") % 3 == 0)
-        .select("doc_id")
-        .collect()
-    }
-    assert set(out) == new_ids  # every batch doc classified exactly once
-    # ground truth: ALL exact-Jaccard >= 4/5 pairs, language-agnostic
-    # (the query dedups across langs, unlike jaccard_pairs' per-lang
-    # contract), brute-forced in the driver at this fixture size
-    sets: dict[int, set] = {}
-    for r in dedup.shingles(docs, n=3, distinct=True).collect():
-        sets.setdefault(r["doc_id"], set()).add(r["shingle"])
-    pairs = []
-    for a in sorted(sets):
-        for b in sorted(sets):
-            if a >= b:
-                continue
-            c = len(sets[a] & sets[b])
-            u = len(sets[a] | sets[b])
-            if u and c * 5 >= u * 4:
-                pairs.append((a, b))
-    truth_corpus, truth_batch = set(), set()
-    for a, b in pairs:
-        for x, y in ((a, b), (b, a)):
-            if x in new_ids and y not in new_ids:
-                truth_corpus.add(x)
-            if x in new_ids and y in new_ids and y < x:
-                truth_batch.add(x)
-    # soundness: verification makes LSH candidates exact, so every
-    # claimed dup is a true dup of the claimed kind
-    for d, s in out.items():
-        if s == "dup_corpus":
-            assert d in truth_corpus
-        elif s == "dup_batch":
-            assert d in truth_batch and d not in truth_corpus
-        else:
-            assert d not in truth_corpus
-
-
-def test_minhash_inc_fast_statuses_equal_md5_twin(spark):
-    """The xxhash64 scale path must classify the fixture identically
-    to the exact-oracled md5 twin — different hash families can in
-    principle band-collide differently, but exact verification makes
-    false positives impossible and the fixture's near-dup pairs are
-    high-Jaccard enough that both families catch them all (the
-    q_dedup_minhash recall=1.0 argument, applied to statuses)."""
-    from tests.conftest import SF_MED
-
-    slow = {
-        r["doc_id"]: r["status"]
-        for r in registry.QUERIES["q_dedup_minhash_inc"](
-            spark, SF_MED
-        ).collect()
-    }
-    fast = {
-        r["doc_id"]: r["status"]
-        for r in registry.QUERIES["q_dedup_minhash_inc_fast"](
-            spark, SF_MED
-        ).collect()
-    }
-    assert fast == slow

@@ -1,19 +1,9 @@
-"""Round-9 invariants for the incremental MinHash dedup hardening
-(VERDICT r8 #1/#2):
-
-1. the classification tail must not FORCE a broadcast of the
-   batch-sized flags table — with elective broadcasts disabled the
-   plan must degrade to a shuffled join, never a driver-built map;
-2. the band-bucket posting cap must bound candidate fan-out on a
-   planted boilerplate mega-cluster (the known failure mode of LSH
-   dedup on web crawl) WITHOUT changing any classification status.
-
-Exact end-to-end parity for the capped pipeline itself runs in
-test_oracle_parity / tools/drivercheck.py (the SQL oracle replays the
-cap in its bands_r CTE); these tests pin what the oracle cannot: the
-join-strategy discipline and the fan-out bound under adversarial
-duplication.
-"""
+"""Round-9 invariants: the classification tail shared by every
+incremental pairwise dedup (dedup._classify_new_batch), the
+incremental prefix-filter dedups (set similarity and containment
+against a frozen prefix index), the DoReMi mixture update and
+winnow_pairs' argument check. The MinHash-LSH tests of this round
+live in tests/test_dedup_lsh.py."""
 
 from __future__ import annotations
 
@@ -21,142 +11,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from fhir2sql_spark import registry
-from fhir2sql_spark.operators import dedup
-from fhir2sql_spark.queries.llm import _INC_BUCKET_CAP, _cap_bucket_postings
 
 registry.load_all()
 
-BOILER = (
-    "terms of service apply to this page please read carefully "
-    "before continuing to use the website"
-)
-
-
-@pytest.fixture(scope="module")
-def megacluster_dir(spark, tmp_path_factory):
-    """A documents table where 240 of 300 docs are byte-identical
-    boilerplate (ONE LSH bucket per band holds 240 postings) and 60
-    are unique — planted in the fixture layout load() expects."""
-    rows = []
-    for i in range(240):
-        rows.append((i, BOILER, "en", "web", len(BOILER)))
-    for j in range(60):
-        i = 240 + j
-        text = (
-            f"unique document number {j} speaks about topic {j * 7} "
-            f"with entirely distinct content alpha{j} beta{j} gamma{j}"
-        )
-        rows.append((i, text, "en", "web", len(text)))
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    d = tmp_path_factory.mktemp("megacluster")
-    df.coalesce(1).write.parquet(str(d / "documents.parquet"))
-    return str(d)
-
-
-def test_cap_bucket_postings_keeps_min_ids(spark):
-    banded = spark.createDataFrame(
-        [(i, 0, "bucket") for i in range(300)]
-        + [(i, 1, f"solo{i}") for i in range(300)],
-        "doc_id long, band int, bkey string",
-    )
-    out = _cap_bucket_postings(banded, "band", "bkey")
-    mega = out.where(F.col("band") == 0).select("doc_id").collect()
-    assert len(mega) == _INC_BUCKET_CAP
-    # deterministic min-id keep, so the SQL oracle's ROW_NUMBER replay
-    # selects the identical postings
-    assert sorted(r.doc_id for r in mega) == list(range(_INC_BUCKET_CAP))
-    # singleton buckets are untouched
-    assert out.where(F.col("band") == 1).count() == 300
-
-
-def test_cap_plan_uses_window_group_limit(spark):
-    """The cap must plan as a WindowGroupLimit (per-partition top-64
-    prune BEFORE the full sort), not a full window + filter — this
-    subtree runs inside the verify checkpoint, so tools/explain_audit
-    cannot see it in the final plan and the pin lives here."""
-    banded = spark.range(100).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 3).cast("int").alias("band"),
-        F.lit("k").alias("bkey"),
-    )
-    plan = (
-        _cap_bucket_postings(banded, "band", "bkey")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "WindowGroupLimit" in plan, plan
-
-
-def test_megacluster_candidate_fanout_bounded(spark, megacluster_dir):
-    """Uncapped, the 240-doc cluster yields ~80 batch probes x 160
-    index postings x 8 bands = ~100k corpus candidate rows; capped,
-    at most batch x bands x cap survive the probe join."""
-    from fhir2sql_spark.tables import load
-
-    docs = load(spark, megacluster_dir, "documents")
-    sig = dedup.minhash_signatures(docs, num_hashes=32, seed=42)
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.col("signature").getItem(i)
-                            for i in range(b * 4, (b + 1) * 4)
-                        ],
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("bkey"),
-    )
-    nb = banded.where(F.col("doc_id") % 3 == 0)
-    idx = _cap_bucket_postings(banded.where(F.col("doc_id") % 3 != 0), "bkey")
-    n_batch = nb.select("doc_id").distinct().count()
-    cand = nb.select("bkey", F.col("doc_id").alias("doc_a")).join(
-        idx.select("bkey", F.col("doc_id").alias("doc_b")), "bkey"
-    )
-    uncapped = nb.select("bkey", F.col("doc_id").alias("doc_a")).join(
-        banded.where(F.col("doc_id") % 3 != 0).select(
-            "bkey", F.col("doc_id").alias("doc_b")
-        ),
-        "bkey",
-    )
-    assert cand.count() <= n_batch * 8 * _INC_BUCKET_CAP
-    # and the cap is doing real work on this fixture
-    assert uncapped.count() > cand.count()
-
-
-@pytest.mark.parametrize(
-    "qname", ["q_dedup_minhash_inc", "q_dedup_minhash_inc_fast"]
-)
-def test_megacluster_statuses_survive_cap(spark, megacluster_dir, qname):
-    """Every kept posting in a boilerplate bucket is a byte-identical
-    twin of the dropped ones, so capping loses no dup evidence: all
-    batch cluster members still classify dup_corpus, and the unique
-    batch docs stay new."""
-    out = {
-        r["doc_id"]: r["status"]
-        for r in registry.QUERIES[qname](spark, megacluster_dir).collect()
-    }
-    for d, s in out.items():
-        if d < 240:
-            assert s == "dup_corpus", (d, s)
-        else:
-            assert s == "new", (d, s)
-
 
 def test_classification_join_is_not_forced_broadcast(spark, sf_dir):
-    """VERDICT r8 #1: flags is O(batch x dup-rate); with elective
-    broadcasts disabled the LeftOuter classification join must plan
-    as a shuffled join. The verify step's candidate broadcasts are
-    FORCED by design (bounded, candidate-sized) and remain — so the
-    pin targets the LeftOuter join specifically."""
+    """flags is O(batch x dup-rate); with elective broadcasts disabled
+    the LeftOuter classification join must plan as a shuffled join.
+    The verify step's candidate broadcasts are FORCED by design
+    (bounded, candidate-sized) and remain — so the pin targets the
+    LeftOuter join specifically."""
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     adaptive_thr = spark.conf.get(
         "spark.sql.adaptive.autoBroadcastJoinThreshold", None
@@ -186,7 +50,7 @@ def test_inc_prefix_postings_two_exchanges(spark, sf_dir):
     2-big-exchange shape (one sid exchange shared by the distinct
     aggregate and the frozen-df window, one doc_id exchange for the
     size+prefix windows) — the O(batch postings) claim is this plan."""
-    from fhir2sql_spark.queries.llm import _inc_prefix_postings
+    from fhir2sql_spark.operators.dedup import _inc_prefix_postings
     from fhir2sql_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")

@@ -162,6 +162,23 @@ def test_viterbi_known(spark):
     assert _viterbi_py("abcab", {"ab": 3, "bca": 5, "cab": 4}) == 7
 
 
+def test_viterbi_duplicate_piece_keeps_max_weight(spark):
+    """A piece scored twice counts at its larger weight, whatever the
+    row order: 'abab' = ab|ab at weight 9 each, not 1."""
+    from fhir2sql_spark.operators.text import viterbi_best_bits
+
+    scored = spark.createDataFrame(
+        [("ab", 9), ("ab", 1)], "piece string, wgt long"
+    )
+    got = {
+        r["w"]: r["vbits"]
+        for r in viterbi_best_bits(
+            _words_df(spark, ["abab"]), scored
+        ).collect()
+    }
+    assert got == {"abab": 18}
+
+
 def test_viterbi_property_random(spark):
     """Operator == Python DP over random words and weighted vocabs
     (one batched run; integer weights)."""

@@ -507,7 +507,7 @@ CHECKS: list[tuple[str, str, str]] = [
     # (the r9 stop-bucket cap's WindowGroupLimit lives in the
     # pre-checkpoint candidate subtree, invisible in these final
     # plans — pinned instead on the subtree itself in
-    # tests/test_round9_ops.py::test_cap_plan_uses_window_group_limit)
+    # tests/test_dedup_lsh.py::test_cap_plan_uses_window_group_limit)
     (
         "q_dedup_minhash_inc_fast",
         "BroadcastHashJoin",
