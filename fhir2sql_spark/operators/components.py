@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 
 def connected_components(
     edges: DataFrame,
@@ -57,22 +59,11 @@ def connected_components(
     # derivation (e.g. an exact-Jaccard self-join) is far more
     # expensive than the propagation itself, and without a lineage
     # barrier every round's join would recompute it from scratch.
-    # r11 (VERDICT r10 #5 size audit): the symmetrized edge set is
-    # FACT-SIZED (2x the pair relation) — pin it serialized on disk,
-    # not as deserialized heap blocks (the 24 g calibration from the
-    # r10 basket OOM). The per-round label/staged frames stay at the
-    # default level: they are node-sized and are the per-round hot
-    # reads.
-    from pyspark.storagelevel import StorageLevel
+    sym = pin(sym.distinct())
 
-    sym = sym.distinct().localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY
-    )
-
-    labels = (
+    labels = pin(
         sym.select(F.col("a").alias("node")).distinct().withColumn("label", F.col("node"))
     )
-    labels = labels.localCheckpoint(eager=True)
 
     # Self rows, derived from the pinned node-sized labels frame (not
     # from sym — that would re-run a fact-sized distinct every round).
@@ -86,9 +77,10 @@ def connected_components(
     sym0 = sym.where(F.col("a") != F.col("b")).unionByName(self_rows)
 
     for _ in range(max_rounds):
-        # One materialization per round: the checkpoint IS the round's
-        # single evaluation, and the convergence count then scans the
-        # checkpointed (tiny) result instead of re-running the join.
+        # One materialization per round: the convergence count fills
+        # the pin, which IS the round's single evaluation, and the
+        # next round reads the pinned (tiny) result instead of
+        # re-running the join.
         # The self row makes the group total over nodes AND carries the
         # node's previous label (the a == b row joined its own label),
         # so min(lab) = least(own, neighbor-min) and the old left
@@ -98,7 +90,7 @@ def connected_components(
             F.col("label").alias("lab"),
             (sym0["a"] == sym0["b"]).alias("own"),
         )
-        staged = (
+        staged = pin(
             joined.groupBy("node2")
             .agg(
                 F.min("lab").alias("new_label"),
@@ -109,7 +101,6 @@ def connected_components(
                 "new_label",
                 (F.col("new_label") < F.col("old_label")).alias("chg"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = staged.where(F.col("chg")).count()
         labels = staged.select("node", F.col("new_label").alias("label"))

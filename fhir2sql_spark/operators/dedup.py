@@ -38,6 +38,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 # Mersenne prime 2^31-1: universal-hash modulus. Keeping the domain at
 # 31 bits means a*x products stay under 2^62 — safe in JVM signed-64
 # arithmetic with ANSI overflow checks on.
@@ -273,7 +275,7 @@ def verify_candidate_pairs(
     # of the doc-id union + the final broadcast join); without a
     # lineage barrier the whole upstream LSH pipeline re-executes for
     # each reference. Candidates are tiny by construction — pin them.
-    candidates = candidates.localCheckpoint(eager=True)
+    candidates = pin(candidates)
     cand_docs = (
         candidates.select(F.col("doc_a").alias("doc_id"))
         .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
@@ -522,7 +524,7 @@ def _classify_new_batch(
     dup-heavy crawl. AQE still elects a broadcast when flags is
     genuinely small (the fixture case); with elective broadcasts
     disabled it degrades to a probe-sized shuffle, never a
-    driver-sized build map (pinned in tests/test_round9_ops.py) —
+    driver-sized build map (pinned in tests/test_frozen_probe.py) —
     the same discipline q_dedup_incremental's classification uses."""
     ver = verify_candidate_pairs(
         docs,
@@ -767,12 +769,11 @@ def setsim_pairs(
         )
         + 1
     )
-    pref = (
+    pref = pin(
         toks.withColumn("__s", F.count(F.lit(1)).over(w_size))
         .withColumn("__pos", F.row_number().over(w))
         .where(F.col("__pos") <= prefix_len)
         .select("doc_id", "__sid")
-        .localCheckpoint(eager=True)
     )
     a = pref.select(F.col("__sid"), F.col("doc_id").alias("doc_a"))
     b = pref.select(
@@ -847,12 +848,11 @@ def containment_pairs(
         )
         + 1
     )
-    pref = (
+    pref = pin(
         toks.withColumn("__s", F.count(F.lit(1)).over(w_size))
         .withColumn("__pos", F.row_number().over(w))
         .where(F.col("__pos") <= prefix_len)
         .select("doc_id", "__sid")
-        .localCheckpoint(eager=True)
     )
     a = pref.select(F.col("__sid"), F.col("doc_id").alias("doc_a"))
     # index side: FULL postings (containment cannot prune B) — taken
@@ -871,7 +871,7 @@ def containment_pairs(
             F.col("doc_id").alias("doc_b"),
         )
     )
-    cand = (
+    cand = pin(
         a.join(
             b,
             (a["__sid"] == b["__sid_b"])
@@ -879,7 +879,6 @@ def containment_pairs(
         )
         .select("doc_a", "doc_b")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     cand_docs = (
         cand.select(F.col("doc_a").alias("doc_id"))
@@ -927,7 +926,6 @@ def _inc_prefix_postings(
     threshold_num: int,
     threshold_den: int,
     n: int,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Shared prologue of the r9 incremental prefix-filter dedups:
     per-doc rarity-ordered prefixes under the FROZEN corpus token
@@ -954,8 +952,8 @@ def _inc_prefix_postings(
 
     Plan: the same 2-big-exchange linear pipeline as setsim_pairs
     (one explicit sid exchange shared by the distinct aggregate and
-    the df window, one doc_id exchange for the size+prefix windows);
-    only the prefix slice is checkpointed — it is the stored-index
+    the df window, one doc_id exchange for the size+prefix windows).
+    Callers pin the returned prefix slice — it is the stored-index
     stand-in, read once as the corpus side and twice as the batch
     probe."""
     sh = (
@@ -982,15 +980,12 @@ def _inc_prefix_postings(
         )
         + 1
     )
-    pref = (
+    return (
         toks.withColumn("__s", F.count(F.lit(1)).over(w_size))
         .withColumn("__pos", F.row_number().over(w))
         .where(F.col("__pos") <= prefix_len)
         .select("doc_id", "__sid")
     )
-    # checkpoint=False exists ONLY so tests can read the pre-barrier
-    # plan (the 2-exchange pin); every query path checkpoints
-    return pref.localCheckpoint(eager=True) if checkpoint else pref
 
 
 def _setsim_inc_candidates(

@@ -46,6 +46,7 @@ from fhir2sql_spark.operators.dedup import (
     _minhash_inc_candidates,
     _setsim_inc_candidates,
 )
+from fhir2sql_spark.operators.reuse import pin
 
 
 def _sid_postings(docs: DataFrame, n: int = 5) -> DataFrame:
@@ -103,7 +104,6 @@ def batch_prefixes(
     threshold_num: int,
     threshold_den: int,
     n: int = 5,
-    checkpoint: bool = True,
     positions: bool = False,
 ) -> DataFrame:
     """Batch-side rarity prefixes under the FROZEN order read from
@@ -118,7 +118,8 @@ def batch_prefixes(
 
     Plan: one sid exchange (postings dedup + the stats equi-join ride
     it; the stored stats side is bucketed by __sid and needs none),
-    one doc_id exchange for the size/rank windows."""
+    one doc_id exchange for the size/rank windows. The probes pin
+    the result; the ingest-time builder stores it."""
     sh = _sid_postings(batch_docs, n=n)
     toks = sh.join(stats, "__sid", "left").withColumn(
         "__df", F.coalesce(F.col("__df"), F.lit(0))
@@ -138,13 +139,12 @@ def batch_prefixes(
         if positions
         else ["doc_id", "__sid"]
     )
-    pref = (
+    return (
         toks.withColumn("__s", F.count(F.lit(1)).over(w_size))
         .withColumn("__pos", F.row_number().over(w))
         .where(F.col("__pos") <= prefix_len)
         .select(*cols)
     )
-    return pref.localCheckpoint(eager=True) if checkpoint else pref
 
 
 # ---------------------------------------------------------------- build
@@ -165,7 +165,6 @@ def build_setsim_prefix_index(
         threshold_num=threshold_num,
         threshold_den=threshold_den,
         n=n,
-        checkpoint=False,
     )
 
 
@@ -205,7 +204,6 @@ def build_batch_prefix_index(
         threshold_num,
         threshold_den,
         n,
-        checkpoint=False,
         positions=positions,
     )
 
@@ -271,7 +269,7 @@ def setsim_probe(
     the stored prefix index, exact verify + classify. ``docs`` is the
     full lake table (verification re-reads candidate texts)."""
     batch = docs.where(F.col("doc_id") % 3 == 0)
-    bp = batch_prefixes(batch, stats, threshold_num, threshold_den, n)
+    bp = pin(batch_prefixes(batch, stats, threshold_num, threshold_den, n))
     cand_corpus, cand_batch = _setsim_inc_candidates(bp, corpus_prefix)
     return _classify_new_batch(
         docs, cand_corpus, cand_batch, threshold_num, threshold_den, n
@@ -344,7 +342,7 @@ def containment_probe(
     """Probe-only q_dedup_containment_inc against the stored full
     posting index."""
     batch = docs.where(F.col("doc_id") % 3 == 0)
-    bp = batch_prefixes(batch, stats, threshold_num, threshold_den, n)
+    bp = pin(batch_prefixes(batch, stats, threshold_num, threshold_den, n))
     batch_full = _sid_postings(batch, n=n).select(
         F.col("__sid").alias("__sid_b"), F.col("doc_id").alias("doc_b")
     )
@@ -400,8 +398,10 @@ def containment_probe_positional(
     in a large container's tail can no longer certify containment);
     the index grows by 2 ints/posting."""
     batch = docs.where(F.col("doc_id") % 3 == 0)
-    bp = batch_prefixes(
-        batch, stats, threshold_num, threshold_den, n, positions=True
+    bp = pin(
+        batch_prefixes(
+            batch, stats, threshold_num, threshold_den, n, positions=True
+        )
     )
     pb = bp.select(
         "__sid", F.col("doc_id").alias("doc_a"), F.col("__s").alias("__sa")

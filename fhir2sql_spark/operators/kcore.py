@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 
 def _degrees(edges: DataFrame) -> DataFrame:
     return (
@@ -46,23 +48,13 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 60) -> DataFrame:
     (deg is the degree WITHIN the k-core, >= k by construction; an
     empty result means the graph has no k-core).
 
-    Each round materializes the surviving edge set with an eager
-    localCheckpoint: the next round's degree aggregate, the
-    convergence probe and the two anti-joins all re-read the
-    checkpointed partitions instead of re-running the whole peeling
+    Each round pins the surviving edge set: the next round's degree
+    aggregate, the convergence probe and the two anti-joins all re-read
+    the pinned partitions instead of re-running the whole peeling
     lineage (which doubles per round otherwise)."""
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    # r11 (VERDICT r10 #5 size audit): every ``cur`` generation is an
-    # edge subset — fact-sized on round 0 — so the per-round pins are
-    # serialized DISK_ONLY (no deserialized heap blocks); ``bad`` is
-    # the peeled-vertex list, bounded by the shrinking frontier, and
-    # keeps the default level for the three hot re-reads.
-    from pyspark.storagelevel import StorageLevel
-
-    cur = edges.select("src", "dst").localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY
-    )
+    cur = pin(edges.select("src", "dst"))
     for _ in range(max_rounds):
         # r11: pin DEG (node-sized, the per-round hot frame) instead of
         # the filtered bad list — bad becomes a free filter-scan of the
@@ -72,14 +64,12 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 60) -> DataFrame:
         # conditions on the original column instead of renamed copies),
         # so ReuseExchange collapses the two per-round broadcast builds
         # into one.
-        deg = _degrees(cur).localCheckpoint(eager=True)
+        deg = pin(_degrees(cur))
         bad = deg.where(F.col("deg") < k).select("node")
-        if bad.limit(1).count() == 0:
+        if bad.limit(1).count() == 0:  # fills the deg pin
             return deg
         kept = cur.join(bad, cur["src"] == bad["node"], "left_anti")
-        cur = kept.join(
-            bad, kept["dst"] == bad["node"], "left_anti"
-        ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        cur = pin(kept.join(bad, kept["dst"] == bad["node"], "left_anti"))
     raise RuntimeError(
         f"k-core peeling did not converge within {max_rounds} rounds"
     )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 # xxhash64 → U(0,1): signed long / 2^64 + 0.5 (dyadic-exact double)
 _TWO64 = float(1 << 64)
 
@@ -122,12 +124,8 @@ def kmv_intersection_estimate(
     jaccard 0 / intersection 0 (not a division error)."""
     a = sketch_a.select("h")
     b = sketch_b.select("h")
-    union_k = (
-        a.union(b)
-        .distinct()
-        .orderBy("h")
-        .limit(k)
-        .localCheckpoint(eager=True)  # tiny; pins one evaluation
+    union_k = pin(  # tiny; pins one evaluation
+        a.union(b).distinct().orderBy("h").limit(k)
     )
     n_union = union_k.count()
     import pandas as pd  # session-local 1-row frame

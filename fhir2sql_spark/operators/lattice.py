@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 # Exactness guard (ADVICE r6: the old flat |q| <= 3e6 bound was NOT
 # dim-aware — at dim=1024 it admitted dim*q^2 = 9.2e15 > 2^53 and a
 # 2*X@C.T cross term of 1.8e16, breaking the float64-BLAS-is-exact
@@ -72,7 +74,13 @@ def quantize(
 ) -> DataFrame:
     """(vid, qv array<long>): the engine-portable integer lattice
     embedding. One interpreted HOF pass over the corpus (quantization
-    happens once; every downstream pass is Arrow/numpy)."""
+    happens once; every downstream pass is Arrow/numpy).
+
+    Callers pin the result: every trained-lattice query makes 3-5
+    passes over it (seed collect, Lloyd rounds, assignment/search),
+    and without a pin each pass re-runs the HOF quantization from the
+    parquet scan (r11 measurement: 21-29 s executor CPU per query at
+    sf0.1, most of it repeated quantize)."""
     return df.select(
         F.col(id_col).alias("vid"),
         F.transform(
@@ -80,24 +88,6 @@ def quantize(
             lambda x: F.round(x * scale, 0).cast("long"),
         ).alias("qv"),
     )
-
-
-def materialize(qv: DataFrame) -> DataFrame:
-    """Serialized lazy materialization barrier for a quantized corpus.
-
-    Every trained-lattice query makes 3-5 passes over quantize()'s
-    output (seed collect, Lloyd rounds, assignment/search); without a
-    barrier each pass re-runs the interpreted HOF quantization from
-    the parquet scan (r11 measurement: 21-29 s executor CPU per query
-    at sf0.1, most of it repeated quantize). localCheckpoint at
-    DISK_ONLY materializes once, serialized — the PLANS.md fact-size
-    discipline (no deserialized heap pin) — and, unlike persist(), is
-    NOT registered in the CacheManager, so identical quantize plans
-    in later bench queries cannot silently share it (each query's
-    runs stay self-contained computations)."""
-    from fhir2sql_spark.operators.reuse import materialize_serialized
-
-    return materialize_serialized(qv)
 
 
 def _seed_codebook(qv: DataFrame, k: int) -> list:
@@ -195,7 +185,7 @@ def lattice_kmeans(
     spark = qv.sparkSession
     sc = spark.sparkContext
     cents = _seed_codebook(qv, k)
-    base = qv.localCheckpoint(eager=False)
+    base = pin(qv)
 
     for _ in range(iters):
         cids = np.array([c for c, _ in cents], dtype=np.int64)
@@ -437,7 +427,7 @@ def lattice_pq_train(
         np.stack([v[s * sub : (s + 1) * sub] for _, v in seed])
         for s in range(m)
     ]
-    base = qv.localCheckpoint(eager=False)
+    base = pin(qv)
 
     for _ in range(iters):
         bc = sc.broadcast(np.stack(books))  # (m, n_codes, sub)

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 _MIMES = ["image/png", "audio/wav", "application/pdf", "text/plain"]
 
 DECODED_SCHEMA = (
@@ -287,9 +289,7 @@ def phash_dedup_pairs(blobs: DataFrame, k: int = 4) -> DataFrame:
     registered in the CacheManager (cross-query sharing hazard);
     localCheckpoint blocks are released by the ContextCleaner when
     the frame is garbage-collected."""
-    from fhir2sql_spark.operators.reuse import materialize_serialized
-
-    bands = materialize_serialized(dhash_bands(blobs))
+    bands = pin(dhash_bands(blobs))
     flat = bands.select(
         "blob_id", F.posexplode("bands").alias("band_no", "band")
     )

@@ -19,13 +19,13 @@ with one NULL-degree SELF row per node, so the contribution aggregate
 emits a row for EVERY node (sum() skips the NULL term — value-exact)
 and the old per-round ``ranks LEFT JOIN contribs`` rejoin disappears
 from the loop entirely. With no dangling mass, ``ranks`` is then
-consumed ONCE per round, so the per-round eager checkpoint (which
-existed to stop the double-consumer lineage doubling) relaxes to a
-bounded-depth lazy barrier every ``checkpoint_every`` rounds — the
-whole power iteration becomes one lazy plan chain materialized by the
-caller's action (r11 task audit: 92 -> 35 jobs, 131 -> 49 stages for
-q_graph_pagerank). Dangling graphs keep the per-round eager pin: the
-dangling-mass aggregate is a second consumer of ``ranks``. Ranks are
+consumed ONCE per round, so the per-round pin (which exists to stop
+the double-consumer lineage doubling) relaxes to a bounded-depth pin
+every ``_PIN_EVERY`` rounds — the whole power iteration becomes one
+plan chain materialized by the caller's action (r11 task audit:
+92 -> 35 jobs, 131 -> 49 stages for q_graph_pagerank). Dangling
+graphs keep the per-round pin: the dangling-mass aggregate is a
+second consumer of ``ranks``. Ranks are
 doubles (exactness is impossible: rank/outdeg is a non-terminating
 rational); determinism is therefore within float merge-order jitter,
 which tests bound against a numpy reference (1e-9 on the fixture) and
@@ -37,6 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
+# without dangling mass, ``ranks`` is pinned every this many rounds
+# (and after the last) only to bound plan depth
+_PIN_EVERY = 5
+
 
 def pagerank(
     edges: DataFrame,
@@ -44,20 +50,18 @@ def pagerank(
     dst: str = "dst",
     iters: int = 15,
     damping: float = 0.85,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Rank every node incident to ``edges`` (directed). Returns
     (node, rank) with sum(rank) == 1 up to float error. Parallel
     edges are collapsed (each u->v counted once, standard adjacency
     semantics); self-loops participate like any edge."""
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
-    nodes = (
+    nodes = pin(
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("t").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n = nodes.count()
+    n = nodes.count()  # fills the pin
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))  # empty frame, right schema
     outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
@@ -66,22 +70,14 @@ def pagerank(
     # contribution groupBy TOTAL over nodes: rank/NULL is NULL, sum()
     # drops it (identical csum values), but the group always exists,
     # so no rejoin against ranks is needed to resurrect
-    # zero-contribution nodes. r11 (VERDICT r10 #5 size audit): adj is
-    # FACT-SIZED (every edge) and static across rounds — serialized
-    # DISK_ONLY, no deserialized heap pin; the per-round rank frame
-    # stays default (node-sized).
-    from pyspark.storagelevel import StorageLevel
-
+    # zero-contribution nodes.
     self_rows = nodes.select(
         F.col("node").alias("s"),
         F.col("node").alias("t"),
         F.lit(None).cast("long").alias("deg"),
     )
-    adj = (
-        e.join(outdeg, "s")
-        .select("s", "t", "deg")
-        .unionByName(self_rows)
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    adj = pin(
+        e.join(outdeg, "s").select("s", "t", "deg").unionByName(self_rows)
     )
 
     # The dangling-node SET is static — compute it once; the per-round
@@ -89,13 +85,13 @@ def pagerank(
     # and when the set is empty (most constructed graphs) the whole
     # term — one join + one crossJoin per round — vanishes from the
     # plan entirely, and with it the second per-round consumer of
-    # ``ranks`` (see checkpoint policy below).
-    dangling_nodes = nodes.join(
-        outdeg, nodes.node == outdeg.s, "left_anti"
-    ).localCheckpoint(eager=True)
+    # ``ranks`` (see pin policy below).
+    dangling_nodes = pin(
+        nodes.join(outdeg, nodes.node == outdeg.s, "left_anti")
+    )
     has_dangling = dangling_nodes.count() > 0
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
+    ranks = pin(nodes.withColumn("rank", F.lit(1.0 / n)))
     for i in range(iters):
         contribs = (
             adj.join(ranks, adj.s == ranks.node)
@@ -119,16 +115,14 @@ def pagerank(
                 + F.lit(damping) * (F.col("csum") + dmass_per_node)
             ).alias("rank"),
         )
-        # Checkpoint policy: with dangling mass, ranks is consumed
-        # TWICE per round (contribution join + dangling aggregate) and
-        # an unmaterialized lineage doubles per round — the per-round
-        # EAGER pin is the floor (checkpoint_every>1 was measured 2-4x
-        # slower under double consumption). Without dangling, ranks is
-        # consumed ONCE per round, so a LAZY barrier every
-        # checkpoint_every rounds merely bounds plan depth and the
-        # whole chain executes in the caller's single action.
-        if has_dangling:
-            ranks = ranks.localCheckpoint(eager=True)
-        elif (i + 1) % checkpoint_every == 0 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=False)
+        # Pin policy: with dangling mass, ranks is consumed TWICE per
+        # round (contribution join + dangling aggregate) and an
+        # unpinned lineage doubles per round — a per-round pin is the
+        # floor (pinning every 5th round was measured 2-4x slower under
+        # double consumption). Without dangling, ranks is consumed
+        # ONCE per round, so a pin every _PIN_EVERY rounds merely
+        # bounds plan depth and the whole chain executes in the
+        # caller's single action.
+        if has_dangling or (i + 1) % _PIN_EVERY == 0 or i == iters - 1:
+            ranks = pin(ranks)
     return ranks

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 
 def pq_search(
     queries: DataFrame,
@@ -384,7 +386,7 @@ def pq_train_codebooks(
         books[s] = ps[chosen]
 
     out_schema = "s int, j int, cnt long, vsum array<double>"
-    data = v.select("vec").localCheckpoint(eager=False)
+    data = pin(v.select("vec"))
     for _ in range(iters):
         bks = books.copy()
         bn2 = (bks**2).sum(axis=2)
@@ -430,11 +432,13 @@ def pq_train_codebooks(
                     books[s, j] = sums[s, j] / cnts[s, j]
 
     spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [
-            (s, j, books[s, j].tolist())
-            for s in range(m)
-            for j in range(n_codes)
-        ],
-        "s int, code_id int, w array<double>",
-    ).localCheckpoint(eager=True)
+    return pin(
+        spark.createDataFrame(
+            [
+                (s, j, books[s, j].tolist())
+                for s in range(m)
+                for j in range(n_codes)
+            ],
+            "s int, code_id int, w array<double>",
+        )
+    )

@@ -1,4 +1,4 @@
-"""Serialized reuse barriers for multi-consumer intermediate frames.
+"""The one reuse barrier for multi-consumer intermediate frames.
 
 Catalyst expands every DataFrame reference into its full subtree, and
 ReuseExchange only collapses *identical* exchange subtrees — a frame
@@ -8,21 +8,31 @@ for a derivation that already paid a shuffle (co-occurrence edge
 lists) or an interpreted HOF pass (lattice quantization) it multiplies
 the dominant cost by the consumer count (r11 measurements: 19.8 s
 executor CPU for q_graph_jaccard's 4-6 edge re-derivations, 21-29 s
-per trained-lattice query).
+per trained-lattice query). Iterative operators (components, kcore,
+pagerank) pin each round so their plans stay O(1) deep.
 
-``materialize_serialized`` is the repo-wide barrier for FACT-SIZED
-frames: a lazy ``localCheckpoint`` at ``StorageLevel.DISK_ONLY`` —
+``pin`` is the only barrier queries and operators use, and it has one
+policy, ``localCheckpoint(eager=False, storageLevel=DISK_ONLY)``:
 
-- serialized on disk, never a deserialized heap pin (the PLANS.md
-  fact-size discipline; the eager MEMORY_AND_DISK default is reserved
-  for vocabulary-sized frames);
-- lazy: materialized by the query's own first action, so nothing runs
-  at plan-build time;
-- NOT registered in the CacheManager (unlike ``persist``), so two
-  bench queries with byte-identical sub-plans can never silently
-  share results — every timed run stays a self-contained computation;
-- lineage-truncating, which also keeps iterative consumers' plans
-  O(1) (the components/pagerank pattern).
+- lazy: nothing extra runs at the call. Under AQE the frame's shuffle
+  stages still execute while its plan is built; its last stage runs in
+  the first job that reads the pin, and the local checkpoint then
+  fills any partitions that job skipped, so a ``limit(1).count()``
+  probe leaves every partition pinned for later consumers;
+- DISK_ONLY: blocks are serialized on disk, never a deserialized heap
+  pin, whatever the frame's size (the PLANS.md fact-size discipline);
+- never registered in the CacheManager, unlike ``persist``/``cache``:
+  a later query with a byte-identical sub-plan cannot silently read
+  an earlier run's blocks, so every timed run stays a self-contained
+  computation;
+- lineage-truncating, and alive as long as the plan that reads it:
+  the blocks are released by the ContextCleaner once that plan is
+  garbage-collected.
+
+The sync (``sync/pipeline.py``) is the one scoped exception: its two
+``cache()`` pins must outlive several actions inside one call and be
+released deterministically when the call returns or raises, so they
+live in an ``ExitStack`` rather than here.
 """
 
 from __future__ import annotations
@@ -31,5 +41,5 @@ from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 
-def materialize_serialized(df: DataFrame) -> DataFrame:
+def pin(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)

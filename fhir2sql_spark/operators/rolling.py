@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators.packing import distributed_prefix_sum
+from fhir2sql_spark.operators.reuse import pin
 
 _GRAIN_SECONDS = {
     "minute": 60,
@@ -143,11 +144,11 @@ def rolling_distinct(
     # has already been subtracted), so the running sum at each marker
     # is the rolling distinct count. The stream is provably tiny
     # (positions are bucket-grain: <= 2 x time-span rows after the
-    # per-position aggregation), so it is checkpointed once — the
+    # per-position aggregation), so it is pinned once — the
     # prefix sum's range-repartition needs a sampling pass plus two
     # consumers, which would otherwise re-run the full upstream
     # lineage three more times.
-    stream = deltas.unionByName(grid).localCheckpoint()
+    stream = pin(deltas.unionByName(grid))
     swept = distributed_prefix_sum(
         stream, [F.col("pos"), F.col("__m")], "__d", out_col="__c"
     )

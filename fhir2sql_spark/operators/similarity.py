@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 # Fixture embedding dimensionality. Operators take dim explicitly;
 # this is only the default.
 DIM = 64
@@ -315,9 +317,9 @@ def cosine_near_pairs(
     # lineage barrier: without it Catalyst collapses the norm
     # projection into the post-join projection and recomputes both
     # norms for every PAIR (measured 1.5x slower)
-    a = a.localCheckpoint(eager=False)
-    b = b.localCheckpoint(eager=False)
-    # the checkpoint RDD inherits the (1-2 partition) bounded-slice
+    a = pin(a)
+    b = pin(b)
+    # the pinned RDD inherits the (1-2 partition) bounded-slice
     # scan layout, which serializes the O(n^2) fold into one task;
     # spread the STREAM side of the nested-loop join over the cluster
     # (work here scales with n^2, not input bytes)
@@ -554,9 +556,9 @@ def kmeans_codebook(
     # `x / sqrt(aggregate(...))` expression re-evaluates the norm fold
     # per ELEMENT (HOFs are CodegenFallback — no subexpression
     # elimination), which alone cost more than the whole BLAS argmax.
-    normed = v.select(
-        "vid", F.xxhash64("vid", F.lit(seed)).alias("h"), "vec"
-    ).localCheckpoint(eager=False)
+    normed = pin(
+        v.select("vid", F.xxhash64("vid", F.lit(seed)).alias("h"), "vec")
+    )
 
     import numpy as np
 
@@ -577,10 +579,12 @@ def kmeans_codebook(
         chosen.append(nxt)
         sims = np.maximum(sims, pool @ pool[nxt])
     spark = vectors.sparkSession
-    cents = spark.createDataFrame(
-        [(i, pool[c].tolist()) for i, c in enumerate(chosen)],
-        "cent_id int, cent_vec array<double>",
-    ).localCheckpoint(eager=True)
+    cents = pin(
+        spark.createDataFrame(
+            [(i, pool[c].tolist()) for i, c in enumerate(chosen)],
+            "cent_id int, cent_vec array<double>",
+        )
+    )
 
     import pandas as pd
 
@@ -664,16 +668,15 @@ def kmeans_codebook(
                 ).alias("new_vec"),
             )
         )
-        cents = (
-            cents.join(raw, "cent_id", "left")
-            .select(
+        cents = pin(
+            cents.join(raw, "cent_id", "left").select(
                 "cent_id", F.coalesce("new_vec", "cent_vec").alias("cent_vec")
             )
-            .localCheckpoint(eager=True)
         )
-        # the eager checkpoint above ran every job that reads this
-        # round's broadcast — release it so a long-lived session
-        # doesn't accumulate one codebook matrix per round
+        # the pin above ran the shuffle stages, which are the only jobs
+        # that read this round's broadcast — release it so a
+        # long-lived session doesn't accumulate one codebook matrix
+        # per round
         bc.unpersist(False)
     return cents
 

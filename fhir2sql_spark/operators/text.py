@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 # Tiny per-language marker lexicons for the heuristic language ID.
 # (The fixture's `lang` column is ground truth; the heuristic is the
 # operator under test, scored against it in tests.)
@@ -302,11 +304,10 @@ def exact_heavy_hitters(
         hot = [t for t, c in counts.items() if c >= local_bar]
         yield pd.DataFrame({token_col: pd.Series(hot, dtype="object")})
 
-    cands = (
+    cands = pin(  # tiny; pins the candidate scan
         tokens.select(token_col)
         .mapInPandas(local_candidates, f"{token_col} string")
         .distinct()
-        .localCheckpoint(eager=True)  # tiny; pins the candidate scan
     )
     return (
         tokens.join(F.broadcast(cands), token_col, "left_semi")
@@ -801,10 +802,10 @@ def dsir_logweights(
     # (<= buckets rows per doc, four integer columns), so a lineage
     # barrier here is cheap at any scale — unlike setsim's 600 M-row
     # pre-aggregation checkpoint.
-    doc_b = (
-        grams.groupBy(id_col, "__is_tgt", "__b")
-        .agg(F.count(F.lit(1)).alias("__n_db"))
-        .localCheckpoint(eager=True)
+    doc_b = pin(
+        grams.groupBy(id_col, "__is_tgt", "__b").agg(
+            F.count(F.lit(1)).alias("__n_db")
+        )
     )
     raw = doc_b.groupBy("__b").agg(F.sum("__n_db").alias("__n_r"))
     tgt = (

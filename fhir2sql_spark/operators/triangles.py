@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
+
 # rank = deg * 2^33 + node packs the (degree, node) orientation order
 # into one comparable long: valid while node < 2^33 and deg < 2^30
 # (fixture node ids are part keys, < 2^21 at sf100; degrees < |V|).
@@ -91,14 +93,11 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     three corners via an explode — a config-free, fully distributed
     plan (two equi-joins + one aggregation).
 
-    r11: ``edges`` is materialized once (serialized lazy DISK_ONLY
-    checkpoint) — it is consumed by the degree aggregate (twice), the
-    orientation join and the wedge close, and each branch otherwise
-    re-derives the full co-occurrence pipeline including its
-    group-key exchange (operators/reuse.py)."""
-    from fhir2sql_spark.operators.reuse import materialize_serialized
-
-    edges = materialize_serialized(edges)
+    r11: ``edges`` is pinned once — it is consumed by the degree
+    aggregate (twice), the orientation join and the wedge close, and
+    each branch otherwise re-derives the full co-occurrence pipeline
+    including its group-key exchange (operators/reuse.py)."""
+    edges = pin(edges)
     deg = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
@@ -172,9 +171,7 @@ def edge_jaccard(edges: DataFrame) -> DataFrame:
     edge list is referenced by degrees, orientation, close and the
     final left join — measured 19.8 s executor CPU of re-derivation
     at sf0.1 without it)."""
-    from fhir2sql_spark.operators.reuse import materialize_serialized
-
-    edges = materialize_serialized(edges)
+    edges = pin(edges)
     deg_raw = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 from fhir2sql_spark.queries.util import dec, exact_div
@@ -330,15 +331,10 @@ def q_agg_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmv_sketch_single,
     )
 
-    from fhir2sql_spark.operators.reuse import materialize_serialized
-
     # r11: the distinct-user spine feeds the consumers below and was
     # re-deriving the corpus-sized distinct exchange per consumer —
-    # materialize it once, serialized (it is user-dimension-sized,
-    # unbounded at 100 TB, so never a deserialized heap pin)
-    users = materialize_serialized(
-        load(spark, sf_dir, "events").select("user_id").distinct()
-    )
+    # pin it once
+    users = pin(load(spark, sf_dir, "events").select("user_id").distinct())
     ca = (F.pmod("user_id", F.lit(2)) == 0) | (F.pmod("user_id", F.lit(3)) == 0)
     cb = (F.pmod("user_id", F.lit(2)) == 0) | (F.pmod("user_id", F.lit(5)) == 0)
     a = users.where(ca)

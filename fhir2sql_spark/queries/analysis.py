@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators.asof import asof_join_sorted
 from fhir2sql_spark.operators import text as text_ops
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 from fhir2sql_spark.queries.util import exact_div
@@ -272,11 +273,9 @@ def q_join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("probe_ts"),
     ).distinct()
     # r11: three consumers (bwd asof, fwd asof, the probe-meta
-    # rebuild) re-ran the orders scan + distinct exchange each —
-    # materialize once, serialized (probe table is fact-sized)
-    from fhir2sql_spark.operators.reuse import materialize_serialized
-
-    probes = materialize_serialized(probes)
+    # rebuild) re-ran the orders scan + distinct exchange each — pin
+    # it once
+    probes = pin(probes)
     events = e.select("user_id", "event_id", F.col("ts").alias("event_ts"))
     kw = dict(
         on="user_id",

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 
@@ -67,13 +68,9 @@ def q_diag_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts is referenced twice (totals rollup + top-10); without a
     # lineage barrier each reference re-scans and re-aggregates the
     # fact table — on the 100 TB events table this diagnostic exists
-    # for, that doubles its cost (ADVICE r8). The checkpoint holds
+    # for, that doubles its cost (ADVICE r8). The pin holds
     # O(distinct keys) rows of (key, cnt) on executor disk.
-    counts = (
-        ev.groupBy("user_id")
-        .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
+    counts = pin(ev.groupBy("user_id").agg(F.count("*").alias("cnt")))
     tot = counts.agg(
         F.sum("cnt").alias("total"), F.count("*").alias("n_keys")
     )
@@ -177,7 +174,7 @@ def q_diag_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fhir2sql_spark.operators import lattice
 
     emb = load(spark, sf_dir, "embeddings")
-    qv = lattice.materialize(lattice.quantize(emb))
+    qv = pin(lattice.quantize(emb))
     base = qv.where(F.col("vid") % 3 != 0)
     new = qv.where(F.col("vid") % 3 == 0)
     cents = lattice.lattice_kmeans(base, k=16, iters=2)
@@ -192,14 +189,13 @@ def q_diag_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_new"))
     )
     spine = cents.select(F.col("cent_id").alias("cell"))
-    j = (
+    # pin the k-row per-cell table: the totals row below re-reads
+    # it, and without the barrier BOTH corpus assignment passes
+    # would re-execute for the second reference (4 scans -> 2)
+    j = pin(
         spine.join(nb, "cell", "left")
         .join(nn, "cell", "left")
         .fillna(0, ["n_base", "n_new"])
-        # pin the k-row per-cell table: the totals row below re-reads
-        # it, and without the barrier BOTH corpus assignment passes
-        # would re-execute for the second reference (4 scans -> 2)
-        .localCheckpoint(eager=True)
     )
     t = j.agg(F.sum("n_base").alias("tb"), F.sum("n_new").alias("tn"))
     return j.crossJoin(F.broadcast(t)).select(
@@ -287,7 +283,7 @@ def q_diag_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE documents scan (both sides' counts are
     conditional sums in the same map-side-combined aggregate — never
     two scans), one vocabulary-sized exchange, the (token, n_base,
-    n_new) table eagerly checkpointed for its two consumers (totals
+    n_new) table pinned for its two consumers (totals
     + movers — the q_diag_skew ADVICE r8 rule), totals a 1-row
     broadcast, top-10 a TakeOrderedAndProject. Per ingest the base
     side is a stored token-count table in production, so only the
@@ -298,7 +294,7 @@ def q_diag_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     row COUNTS between source and mirror; this extends that idea to
     distribution drift over content."""
     d = load(spark, sf_dir, "documents")
-    c = (
+    c = pin(
         d.select(
             (F.col("doc_id") % 3 == 0).alias("__new"),
             F.explode(F.split("text", " ")).alias("token"),
@@ -313,7 +309,6 @@ def q_diag_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_new"),
         )
-        .localCheckpoint(eager=True)
     )
     t = c.agg(
         F.sum("n_base").cast("long").alias("tb"),

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators.asof import asof_join, asof_join_sorted
 from fhir2sql_spark.operators.skew import banded_inequality_join
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 from fhir2sql_spark.queries.util import dec
@@ -512,11 +513,11 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Injection requires the join to be a shuffle join (Catalyst skips
     joins it would broadcast), so the confs are set for THIS plan's
-    execution and restored immediately after: the plan is executed
-    eagerly under them via localCheckpoint, so the returned DataFrame
-    is the materialized (tiny) aggregate and NO conf mutation leaks to
-    the caller's session — the driver's other queries keep their
-    broadcast plans. tests/test_bloom_join.py asserts `might_contain`
+    execution and restored immediately after: the plan is pinned under
+    them — pinning plans the frame and, under AQE, runs its join and
+    bloom-filter stages — so the returned DataFrame reads the pinned
+    (tiny) aggregate and NO conf mutation leaks to the caller's
+    session — the driver's other queries keep their broadcast plans. tests/test_bloom_join.py asserts `might_contain`
     lands in the fact scan's filter and that the result matches the
     conf-default plan.
 
@@ -555,7 +556,7 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_price"),
             )
         )
-        return agg.localCheckpoint(eager=True)
+        return pin(agg)
     finally:
         for k, v in saved.items():
             if v is None:

@@ -27,6 +27,7 @@ from fhir2sql_spark.operators.dedup import (
     _inc_prefix_postings,
     _setsim_inc_candidates,
 )
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 from fhir2sql_spark.queries.util import exact_div
@@ -236,7 +237,9 @@ def q_dedup_setsim_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and falls outside every prefix (the property the winnow family
     buys with max_df, here free by construction)."""
     docs = load(spark, sf_dir, "documents")
-    pref = _inc_prefix_postings(docs, threshold_num=1, threshold_den=2, n=5)
+    pref = pin(
+        _inc_prefix_postings(docs, threshold_num=1, threshold_den=2, n=5)
+    )
     is_new = F.col("doc_id") % 3 == 0
     cand_corpus, cand_batch = _setsim_inc_candidates(
         pref.where(is_new), pref.where(~is_new)
@@ -289,7 +292,9 @@ def q_dedup_containment_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     147.3 -> 107.1 s in SCALE.md)."""
     docs = load(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 3 == 0
-    pref = _inc_prefix_postings(docs, threshold_num=4, threshold_den=5, n=5)
+    pref = pin(
+        _inc_prefix_postings(docs, threshold_num=4, threshold_den=5, n=5)
+    )
     # frozen FULL posting index (corpus side, no prefix prune)
     full = dedup.shingles(docs, n=5, distinct=False).select(
         F.xxhash64("lang", "shingle").alias("__sid_b"),
@@ -655,9 +660,9 @@ def q_dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corp = h.where(~F.col("is_new")).select("th").distinct()
     # the sketch: bit positions -> (word, bit) -> bit_or per word.
-    # <= 524 288 rows regardless of corpus size; localCheckpoint
-    # stands in for the STORED sketch (3 consumers)
-    words = (
+    # <= 524 288 rows regardless of corpus size; the pin stands in
+    # for the STORED sketch (3 consumers)
+    words = pin(
         corp.select(F.explode(_bloom_positions(F.col("th"))).alias("pos"))
         .select(
             F.expr("pos div 64").alias("w"),
@@ -665,7 +670,6 @@ def q_dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("w")
         .agg(F.bit_or("b").alias("word"))
-        .localCheckpoint(eager=True)
     )
 
     def bloom_hit(df: DataFrame, *carry: str) -> DataFrame:
@@ -1284,7 +1288,7 @@ def q_embed_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fhir2sql_spark.operators import lattice
 
     emb = load(spark, sf_dir, "embeddings")
-    qv = lattice.materialize(lattice.quantize(emb, scale=_LATTICE_SCALE))
+    qv = pin(lattice.quantize(emb, scale=_LATTICE_SCALE))
     cents = lattice.lattice_kmeans(qv, k=16, iters=2)
     return lattice.lattice_ivf_topk(
         qv.where(F.col("vid") < 10), qv, cents, k=5, n_probe=4
@@ -1480,7 +1484,7 @@ def q_embed_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fhir2sql_spark.operators import lattice
 
     emb = load(spark, sf_dir, "embeddings")
-    qv = lattice.materialize(lattice.quantize(emb, scale=_LATTICE_SCALE))
+    qv = pin(lattice.quantize(emb, scale=_LATTICE_SCALE))
     books = lattice.lattice_pq_train(qv, m=4, n_codes=16, iters=2)
     return lattice.lattice_pq_search(
         qv.where(F.col("vid") < 5), qv, books, k=5, m=4

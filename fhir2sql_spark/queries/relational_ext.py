@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 from fhir2sql_spark.queries.util import DEC2, dec, exact_div
@@ -827,21 +828,20 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplodes over the array (i < j; baskets are <= 7 lines, so
     the fan-out is trivially bounded and the a-priori semi-join
     prune bought nothing), and the one fact-sized shared frame is
-    persisted StorageLevel.DISK_ONLY for its three consumers
-    (item counts, order total, pair explode) — serialized blocks
-    spill instead of pinning the heap, so the reuse survives the
-    decade where the checkpoint died. Item stats broadcast back
-    onto the vocabulary-sized pair table; blocks are freed by the
-    ContextCleaner when the plan is collected (the localCheckpoint
-    lifecycle)."""
-    from pyspark.storagelevel import StorageLevel
-
+    pinned for its three consumers (item counts, order total, pair
+    explode) — serialized blocks on disk instead of a heap pin, so
+    the reuse survives the decade where the eager checkpoint died.
+    Item stats broadcast back onto the vocabulary-sized pair table.
+    The pin is a local checkpoint, not a ``persist``: a persisted
+    frame is registered in the CacheManager and never released, so
+    every later run in the session read the first run's basket table
+    (its plan showed an ``InMemoryRelation``) instead of computing
+    its own."""
     l = load(spark, sf_dir, "lineitem")
-    g = (
+    g = pin(
         l.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("__ps"))
-        .persist(StorageLevel.DISK_ONLY)
     )
     ic = g.select(
         F.explode("__ps").alias("l_partkey")

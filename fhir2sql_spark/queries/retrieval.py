@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators import similarity
 from fhir2sql_spark.operators.text import hashed_ngram_scores, phrase_hits
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 
@@ -261,7 +262,7 @@ def q_dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fhir2sql_spark.operators import lattice
 
     emb = load(spark, sf_dir, "embeddings")
-    qv = lattice.materialize(lattice.quantize(emb))
+    qv = pin(lattice.quantize(emb))
     n = qv.count()
     k = max(16, math.isqrt(n))
     cents = lattice.lattice_kmeans(qv, k=k, iters=2)
@@ -370,7 +371,7 @@ def q_dedup_semantic_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fhir2sql_spark.operators import lattice
 
     emb = load(spark, sf_dir, "embeddings")
-    qv = lattice.materialize(lattice.quantize(emb))
+    qv = pin(lattice.quantize(emb))
     base = qv.where(F.col("vid") % 3 != 0)
     new = qv.where(F.col("vid") % 3 == 0)
     k = max(16, math.isqrt(base.count()))
@@ -444,7 +445,10 @@ def q_embed_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     st = ux.groupBy("pos").agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-    srow = (
+    # pin the 1-row stats: `code` is referenced twice (query side +
+    # corpus side) and without the barrier the whole per-dim stats
+    # pass re-executes per reference
+    srow = pin(
         st.agg(
             F.array_sort(F.collect_list(F.struct("pos", "mn", "mx"))).alias(
                 "s"
@@ -454,10 +458,6 @@ def q_embed_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(s, z -> z.mn)").alias("mn"),
             F.expr("transform(s, z -> z.mx)").alias("mx"),
         )
-        # pin the 1-row stats: `code` is referenced twice (query side +
-        # corpus side) and without the barrier the whole per-dim stats
-        # pass re-executes per reference
-        .localCheckpoint(eager=True)
     )
     code = emb.crossJoin(F.broadcast(srow)).select(
         "vec_id",

@@ -43,6 +43,7 @@ from fhir2sql_spark.operators.text import (
     winnow_fingerprints,
     winnow_pairs,
 )
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.queries.retrieval import _md5_60
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
@@ -235,12 +236,10 @@ def q_rerank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # phrase scan / the 64-dim cosine fold) once per consumer.
     # Measured at sf1: 17.7 s -> the checkpointed form below; both
     # tables are narrow ((id, score) pairs, a fraction of the corpus).
-    hits = (
+    hits = pin(
         docs.select(
             "doc_id", phrase_hits(F.col("text"), _RRF_PHRASE).alias("n_hits")
-        )
-        .where(F.col("n_hits") > 0)
-        .localCheckpoint(eager=True)
+        ).where(F.col("n_hits") > 0)
     )
     rt = distributed_rank(
         hits, [F.desc("n_hits"), F.asc("doc_id")], out_col="__r0"
@@ -251,16 +250,14 @@ def q_rerank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = emb.where(F.col("vec_id") != 0).select(
         F.col("vec_id").alias("doc_id"), F.col("embedding").alias("cv")
     )
-    scored = (
-        cand.crossJoin(F.broadcast(probe))
-        .select(
+    scored = pin(
+        cand.crossJoin(F.broadcast(probe)).select(
             "doc_id",
             (
                 _dot("qv", "cv")
                 / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("cv", "cv")))
             ).alias("cos"),
         )
-        .localCheckpoint(eager=True)
     )
     re = (
         distributed_rank(
@@ -323,11 +320,10 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fhir2sql_spark.operators.text import nonempty_token_count
 
     n_toks = nonempty_token_count(F.col("text"))
-    la = (
+    la = pin(
         docs.select("lang", n_toks.alias("__n"))
         .groupBy("lang")
         .agg(F.sum("__n").alias("n_tokens"))
-        .localCheckpoint(eager=True)
     )
     tot = la.agg(F.sum("n_tokens").alias("__N"))
     lp = la.crossJoin(F.broadcast(tot)).select(
@@ -486,9 +482,9 @@ def q_dedup_winnow_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three times below (corpus probe side, batch probe side, batch
     # pair check) and without the barrier each reference re-ran the
     # full window from raw text (round-8 A/B at sf100: 177 s -> the
-    # single-pass form; in production this checkpoint IS the stored
+    # single-pass form; in production this pin IS the stored
     # fingerprint index the docstring describes)
-    fps = winnow_fp_sets(docs, k=3, w=4).localCheckpoint(eager=True)
+    fps = pin(winnow_fp_sets(docs, k=3, w=4))
     corp = fps.where(~is_new).select("__fp").distinct()
     bat = fps.where(is_new)
     hits = (
@@ -664,7 +660,7 @@ def q_sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     m = 6
     emb = load(spark, sf_dir, "embeddings")
-    qv = lattice.materialize(lattice.quantize(emb))
+    qv = pin(lattice.quantize(emb))
 
     def mind_udf(centers: list[list[int]]):
         C = np.asarray(centers, dtype=np.int64)          # r x dim
@@ -858,7 +854,7 @@ def q_sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.col("n_h")
     )
     st = a.select("lang", "n_h", sd.alias("sd"), (F.col("n_h") * sd).alias("w"))
-    st = st.localCheckpoint(eager=True)  # 5 rows; feeds 3 consumers
+    st = pin(st)  # 5 rows; feeds 3 consumers
     # ordered sequential fold, NOT SUM: a 5-double SUM is
     # thread-order-sensitive in BOTH engines and a last-ulp shift in
     # tw flips FLOOR(B*w/tw) at a quota boundary (the q_embed_ivfpq
@@ -884,15 +880,13 @@ def q_sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     wq = F.when(
         F.col("tw") == 0.0, F.col("n_h").cast("double") / F.col("tn")
     ).otherwise(F.col("w") / F.col("tw"))
-    q0 = (
-        st.crossJoin(F.broadcast(tot))
-        .select(
+    q0 = pin(
+        st.crossJoin(F.broadcast(tot)).select(
             "lang",
             "n_h",
             F.floor(B * wq).cast("long").alias("base_q"),
             (B * wq - F.floor(B * wq)).alias("rem"),
         )
-        .localCheckpoint(eager=True)
     )
     other = q0.select(
         F.col("lang").alias("l2"), F.col("rem").alias("rem2")
@@ -984,7 +978,7 @@ def q_prune_prototypes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fhir2sql_spark.operators import lattice
 
     emb = load(spark, sf_dir, "embeddings")
-    qv = lattice.materialize(lattice.quantize(emb))
+    qv = pin(lattice.quantize(emb))
     cents = lattice.lattice_kmeans(qv, k=16, iters=2)
     asg = lattice.lattice_assign(qv, cents)
     w = Window.partitionBy("cell").orderBy(F.desc("d2"), "vid")
@@ -1066,13 +1060,11 @@ def q_sample_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection family: the corpus is touched once, scan-shaped, and
     everything after is k ~ dozens of rows."""
     docs = load(spark, sf_dir, "documents")
-    d = (
-        docs.groupBy(F.col("source").alias("domain"))
-        .agg(
+    d = pin(  # k rows; feeds tot, fold, final
+        docs.groupBy(F.col("source").alias("domain")).agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").cast("long").alias("chars"),
         )
-        .localCheckpoint(eager=True)  # k rows; feeds tot, fold, final
     )
     tot = d.agg(
         F.sum("n_docs").cast("double").alias("tn"),
@@ -1098,9 +1090,8 @@ def _doremi_mw_update(e: DataFrame) -> DataFrame:
     with the ORDERED sequential fold (the q_sample_neyman float-sum
     lesson), and smooth with the uniform 20% floor. Expressions are
     byte-identical to the SQL oracles' e/z CTEs."""
-    e = e.withColumn("raw", F.col("w0") * F.exp("excess")).localCheckpoint(
-        eager=True  # k rows; read by the fold AND the final projection
-    )
+    # k rows; read by the fold AND the final projection
+    e = pin(e.withColumn("raw", F.col("w0") * F.exp("excess")))
     z = e.agg(
         F.array_sort(F.collect_list(F.struct("domain", "raw"))).alias("__a"),
         F.count(F.lit(1)).cast("double").alias("k"),
@@ -1198,7 +1189,7 @@ def q_sample_doremi_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     scored = lm_score_docs(docs)
-    g = (
+    g = pin(  # k rows; feeds tot AND se
         scored.join(docs.select("doc_id", "source"), "doc_id")
         .groupBy(F.col("source").alias("domain"))
         .agg(
@@ -1206,7 +1197,6 @@ def q_sample_doremi_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("bits_sum").cast("long").alias("bits"),
             F.sum("n_bigrams").cast("long").alias("bigrams"),
         )
-        .localCheckpoint(eager=True)  # k rows; feeds tot AND se
     )
     tot = g.agg(
         F.sum("n_docs").cast("double").alias("tn"),

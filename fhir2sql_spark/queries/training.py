@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators import dedup
 from fhir2sql_spark.operators.components import connected_components
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 
@@ -685,13 +686,10 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             16,
         ).alias("mix"),
     )
-    # r11: materialize the staged table (serialized; per-doc rows are
-    # fact-sized at 100 TB) — distributed_rank's three consumers
+    # r11: pin the staged table — distributed_rank's three consumers
     # (range sample, counts, final join) otherwise re-run the bigram
     # LM scoring pass each
-    from fhir2sql_spark.operators.reuse import materialize_serialized
-
-    staged = materialize_serialized(staged)
+    staged = pin(staged)
     ranked = distributed_rank(
         staged, [F.col("stage"), F.col("mix"), F.col("doc_id")],
         out_col="train_pos",

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators.packing import distributed_prefix_sum
+from fhir2sql_spark.operators.reuse import pin
 from fhir2sql_spark.registry import query
 from fhir2sql_spark.tables import load
 
@@ -128,9 +129,7 @@ def q_tokens_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: pin the 100-row top-k — distributed_rank reads its input
     # through three consumers (range sample, counts, final join), and
     # unpinned each re-ran the corpus token aggregate + TakeOrdered
-    top = (
-        wc.orderBy(F.desc("cnt"), "w").limit(100).localCheckpoint(eager=True)
-    )
+    top = pin(wc.orderBy(F.desc("cnt"), "w").limit(100))
     ranked = distributed_rank(
         top, [F.desc("cnt"), F.asc("w")], out_col="rnk"
     ).withColumn("rank", F.col("rnk") + 1)
@@ -209,9 +208,7 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: pin the per-doc join — distributed_prefix_sum reads its
     # input through the range sample + partition counts + final join,
     # and unpinned each consumer re-ran BOTH corpus token aggregates
-    from fhir2sql_spark.operators.reuse import materialize_serialized
-
-    j = materialize_serialized(j)
+    j = pin(j)
     c = distributed_prefix_sum(
         j,
         [F.col("doc_id")],
@@ -350,8 +347,8 @@ def q_text_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     standardized on). Complements q_text_pmi on the same bigram
     machinery.
 
-    Plan: ONE arrays_zip bigram explode -> count aggregate,
-    localCheckpointed eagerly because THREE consumers need it (the
+    Plan: ONE arrays_zip bigram explode -> count aggregate, pinned
+    because THREE consumers need it (the
     row margins, column margins, and the final join) — without the
     barrier each vocabulary-sized margin aggregate re-runs the
     corpus-sized explode (the q_text_pmi branch-duplication lesson).
@@ -364,13 +361,12 @@ def q_text_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(F.split("text", " ").alias("ts"))
     m = F.size("ts") - 1
     zipped = F.arrays_zip(F.slice("ts", 1, m), F.slice("ts", 2, m))
-    bi = (
+    bi = pin(
         toks.where(F.size("ts") >= 2)
         .select(F.explode(zipped).alias("g"))
         .select(F.col("g")["0"].alias("w1"), F.col("g")["1"].alias("w2"))
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     r = bi.groupBy("w1").agg(F.sum("c").alias("r1"))
     cc = bi.groupBy("w2").agg(F.sum("c").alias("c1"))
@@ -495,9 +491,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("w") >= 2
     )
     wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    v = wc.select(
-        _bpe_sym_encode(F.col("w")).alias("w"), "cnt"
-    ).localCheckpoint(eager=True)
+    v = pin(wc.select(_bpe_sym_encode(F.col("w")).alias("w"), "cnt"))
     # r11: each round's 1-row top pair is COLLECTED (the bounded-
     # driver-materialization class — it IS the round's training
     # output) and re-applied as literal strings: the per-round top
@@ -678,9 +672,7 @@ def _bpe_encode_map(docs: DataFrame) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    v = wc.select(_bpe_sym_encode(F.col("w")).alias("w"), "cnt").localCheckpoint(
-        eager=True
-    )
+    v = pin(wc.select(_bpe_sym_encode(F.col("w")).alias("w"), "cnt"))
     emap = (
         words.where(F.col("w") != "")
         .distinct()
@@ -900,8 +892,8 @@ _UNIGRAM_PIECE_LENS = (2, 3, 4)
 def _unigram_pieces(wc: DataFrame) -> DataFrame:
     """Seed vocabulary for the unigram-LM queries: the top-256
     weighted substrings (lengths 2-4) of the word-frequency dict —
-    bounded (256 rows, eagerly checkpointed: the matcher broadcast
-    and the final seed_cnt join both consume it), total-ordered
+    bounded (256 rows, pinned: the matcher broadcast and the final
+    seed_cnt join both consume it), total-ordered
     (seed_cnt DESC, piece) so the K boundary is deterministic under
     ties. Input and output are vocabulary-sized."""
     subs = (
@@ -930,11 +922,7 @@ def _unigram_pieces(wc: DataFrame) -> DataFrame:
         .groupBy("piece")
         .agg(F.sum("cnt").cast("long").alias("seed_cnt"))
     )
-    return (
-        subs.orderBy(F.desc("seed_cnt"), "piece")
-        .limit(_UNIGRAM_SEED_K)
-        .localCheckpoint(eager=True)
-    )
+    return pin(subs.orderBy(F.desc("seed_cnt"), "piece").limit(_UNIGRAM_SEED_K))
 
 
 # Shared oracle CTE block for the unigram-LM pair: word-frequency
@@ -1048,11 +1036,7 @@ def q_vocab_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # three consumers (seed mining, segmentation, M-step weights):
     # pin the vocabulary once (the q_text_llr lesson)
-    wc = (
-        words.groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
+    wc = pin(words.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     pieces = _unigram_pieces(wc)
     from fhir2sql_spark.operators.text import greedy_segment_cuts
 
@@ -1060,12 +1044,11 @@ def q_vocab_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: m is bounded (<= 256 candidate pieces) but consumed twice
     # (the total aggregate + the final join) — unpinned, each consumer
     # re-ran the whole cut-chain join + M-step aggregate.
-    m = (
+    m = pin(
         cuts.where(F.col("plen") >= 2)
         .join(wc, "w")
         .groupBy("piece")
         .agg(F.sum("cnt").cast("long").alias("em_cnt"))
-        .localCheckpoint(eager=True)
     )
     tot = m.agg(F.sum("em_cnt").cast("long").alias("__tot"))
     return (
@@ -1190,21 +1173,14 @@ def q_vocab_unigram_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # the one corpus-sized exchange: (lang, word) counts, map-side
     # combined; two consumers (wc derivation + final rollup)
-    lw = (
-        docs.select(
-            "lang", F.explode(F.split("text", " ")).alias("w")
-        )
+    lw = pin(
+        docs.select("lang", F.explode(F.split("text", " ")).alias("w"))
         .where(F.col("w") != "")
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     # vocabulary-sized; three consumers (seed mining + two segmenters)
-    wc = (
-        lw.groupBy("w")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
+    wc = pin(lw.groupBy("w").agg(F.sum("cnt").cast("long").alias("cnt")))
     pieces = _unigram_pieces(wc)
     scored = pieces.select(
         "piece",

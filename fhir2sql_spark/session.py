@@ -64,11 +64,13 @@ def get_spark(app_name: str = "fhir2sql-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         # Cached/persisted plans keep their pre-AQE output partitioning
-        # by default, so a persist materializes at
+        # by default, so a cached frame materializes at
         # initialPartitionNum (512) tiny partitions and every consumer
-        # pays 512-task stages over byte-sized blocks (measured r11:
-        # q_basket_pairs 65 s -> 4 s cold at sf0.1 on a
-        # slow-scheduler host). Letting AQE re-plan cached output
+        # pays 512-task stages over byte-sized blocks (measured r11 on
+        # a then-persisted query frame: 65 s -> 4 s cold at sf0.1 on a
+        # slow-scheduler host). The one cached plan left is the sync's
+        # ``tagged`` change-set (sync/pipeline.py), which has an
+        # exchange below its cache. Letting AQE re-plan cached output
         # partitioning is scale-neutral: at 100 TB the same frame
         # coalesces to advisory-sized partitions instead of a fixed
         # constant (guide 2.2 "fewer, larger reduce partitions").

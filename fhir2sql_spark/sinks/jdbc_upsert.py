@@ -33,7 +33,8 @@ trigger (SURVEY §1.1).
 from __future__ import annotations
 
 import time
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import closing, contextmanager, suppress
 
 from pyspark.sql import DataFrame
 
@@ -73,6 +74,23 @@ def connect_with_retry(
     raise RuntimeError("unreachable")
 
 
+@contextmanager
+def transaction(conn) -> Iterator:
+    """One DBAPI transaction on ``conn``: commit when the block
+    succeeds; when it raises, roll back and re-raise the block's own
+    error — a rollback that fails too (a dropped connection) is
+    suppressed so it cannot replace that error. Always closes."""
+    try:
+        yield conn
+        conn.commit()
+    except Exception:
+        with suppress(Exception):
+            conn.rollback()
+        raise
+    finally:
+        conn.close()
+
+
 def create_mirror_tables(
     connect_fn: Callable[[], object],
     tables: Sequence[str],
@@ -83,8 +101,7 @@ def create_mirror_tables(
     installs the ``update_last_updated()`` plpgsql trigger pair on
     each table (src/db_utils.rs:112-134) — idempotent via
     CREATE OR REPLACE FUNCTION + drop-then-create trigger."""
-    conn = connect_fn()
-    try:
+    with transaction(connect_fn()) as conn:
         cur = conn.cursor()
         if dialect == "pg":
             from fhir2sql_spark.sinks.pg_dialect import pg_statements
@@ -101,24 +118,18 @@ def create_mirror_tables(
         else:
             for t in tables:
                 cur.execute(MIRROR_DDL.format(table=t))
-        conn.commit()
-    finally:
-        conn.close()
 
 
 def table_exists(connect_fn: Callable[[], object], table: str) -> bool:
     """Set-containment existence check (src/db_utils.rs:63-81),
     via a portable probe query."""
-    conn = connect_fn()
-    try:
+    with closing(connect_fn()) as conn:
         cur = conn.cursor()
         try:
             cur.execute(f"SELECT 1 FROM {table} WHERE 1=0")  # noqa: S608
             return True
         except Exception:
             return False
-    finally:
-        conn.close()
 
 
 def foreach_partition_write(
@@ -137,7 +148,7 @@ def foreach_partition_write(
     def write_partition(rows) -> None:
         conn = connect_with_retry(connect_fn, attempts=retry_attempts,
                                   backoff_s=retry_backoff_s)
-        try:
+        with transaction(conn):
             cur = conn.cursor()
             batch = []
             for row in rows:
@@ -147,15 +158,6 @@ def foreach_partition_write(
                     batch = []
             if batch:
                 cur.executemany(sql, batch)
-            conn.commit()
-        except Exception:
-            try:
-                conn.rollback()
-            finally:
-                pass
-            raise
-        finally:
-            conn.close()
 
     df.foreachPartition(write_partition)
 
@@ -228,17 +230,8 @@ def copy_partition_write(
     def write_partition(rows) -> None:
         conn = connect_with_retry(connect_fn, attempts=retry_attempts,
                                   backoff_s=retry_backoff_s)
-        try:
+        with transaction(conn):
             conn.copy_rows(table, columns, (tuple(r) for r in rows))
-            conn.commit()
-        except Exception:
-            try:
-                conn.rollback()
-            finally:
-                pass
-            raise
-        finally:
-            conn.close()
 
     df.foreachPartition(write_partition)
 
@@ -300,22 +293,10 @@ def merge_stage_into_target(
             INSERT_FROM_STAGE_SQL,
             DELETE_FROM_STAGE_SQL,
         )
-    conn = connect_fn()
-    try:
+    with transaction(connect_fn()) as conn:
         cur = conn.cursor()
-        try:
+        with suppress(Exception):
             cur.execute("BEGIN")
-        except Exception:
-            pass
         cur.execute(merge_sql.format(table=table, stage=stage))
         cur.execute(ins_sql.format(table=table, stage=stage))
         cur.execute(del_sql.format(table=table, stage=stage))
-        conn.commit()
-    except Exception:
-        try:
-            conn.rollback()
-        finally:
-            pass
-        raise
-    finally:
-        conn.close()

@@ -194,6 +194,64 @@ class TestDistributedRank:
         keys = [(-r.v, r.id) for r in rows]
         assert keys == sorted(keys)
 
+    def test_rank_and_prefix_sum_on_wide_coalesced_frame(self, spark):
+        """ADVICE r12 medium: on a frame wider than its order columns,
+        column pruning can give the counts branch a narrower exchange
+        child than the final join's. At a size where AQE coalesces
+        the range exchange to a width strictly between 1 and 512, both
+        branches must still agree on spark_partition_id: ranks dense
+        0..n-1 and running sums equal to one global window's. Coalescing
+        is pinned to size-first 1 MB partitions, so the width does not
+        depend on the host's core count."""
+        from pyspark.sql import Window
+
+        conf = spark.conf
+        knobs = {
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1m",
+        }
+        prev = {k: conf.get(k, None) for k in knobs}
+        for k, v in knobs.items():
+            conf.set(k, v)
+        try:
+            n = 40_000
+            df = spark.range(n).select(
+                "id",
+                ((F.col("id") * 7919) % 5000).alias("v"),
+                (F.col("id") % 13).alias("x"),
+                # incompressible, so the shuffle bytes AQE coalesces by
+                # are real
+                F.sha2(F.col("id").cast("string"), 512).alias("pad"),
+            )
+            order = [F.desc("v"), F.asc("id")]
+            ranged, _ = packing._ranged_by(df, order, None)
+            assert 1 < ranged.rdd.getNumPartitions() < 512
+
+            w = Window.orderBy(*order)
+            ranked = packing.distributed_rank(df, order, out_col="rnk")
+            summed = packing.distributed_prefix_sum(df, order, "x", "cx")
+            want = df.select(
+                "id",
+                (F.row_number().over(w) - 1).alias("rnk"),
+                F.sum("x")
+                .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+                .alias("cx"),
+            )
+            got = ranked.join(summed.select("id", "cx"), "id").select(
+                "id", "rnk", "cx"
+            )
+            assert sorted(
+                r.rnk for r in ranked.select("rnk").collect()
+            ) == list(range(n))
+            assert got.exceptAll(want).count() == 0
+            assert want.exceptAll(got).count() == 0
+        finally:
+            for k in knobs:
+                if prev[k] is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, prev[k])
+
     def test_rank_correct_when_aqe_keeps_many_partitions(self, spark):
         """ADVICE r11 high regression: the number-free
         repartitionByRange plans at coalescePartitions.

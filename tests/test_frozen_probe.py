@@ -2,7 +2,10 @@
 the incremental dedups must be (a) prefix-identical to the in-query
 rebuild, (b) status-identical to the registered queries, and (c) read
 its stored side with NO exchange (the bucketed layout the 100 TB
-per-ingest posture is argued on)."""
+per-ingest posture is argued on). Also the in-query incremental
+prefix-filter dedups (set similarity and containment) and the
+classification tail every incremental pairwise dedup shares
+(dedup._classify_new_batch)."""
 
 from __future__ import annotations
 
@@ -28,12 +31,12 @@ def test_batch_prefixes_match_inquery(spark, sf_dir):
     and the corpus side (code identity, but pin it anyway)."""
     docs = _docs(spark, sf_dir)
     is_new = F.col("doc_id") % 3 == 0
-    combined = _inc_prefix_postings(docs, 1, 2, n=5, checkpoint=False)
+    combined = _inc_prefix_postings(docs, 1, 2, n=5)
     stats = fz.corpus_token_stats(docs.where(~is_new))
     got_batch = sorted(
         (r["doc_id"], r["__sid"])
         for r in fz.batch_prefixes(
-            docs.where(is_new), stats, 1, 2, n=5, checkpoint=False
+            docs.where(is_new), stats, 1, 2, n=5
         ).collect()
     )
     want_batch = sorted(
@@ -279,3 +282,98 @@ def test_containment_positional_probe(spark):
         c_side, (F.col("__sid") == F.col("__sid_b")) & budget
     ).count()
     assert pruned <= plain, (pruned, plain)
+
+
+def test_classification_join_is_not_forced_broadcast(spark, sf_dir):
+    """flags is O(batch x dup-rate); with elective broadcasts disabled
+    the LeftOuter classification join must plan as a shuffled join.
+    The verify step's candidate broadcasts are FORCED by design
+    (bounded, candidate-sized) and remain — so the pin targets the
+    LeftOuter join specifically."""
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    adaptive_thr = spark.conf.get(
+        "spark.sql.adaptive.autoBroadcastJoinThreshold", None
+    )
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        for qname in ("q_dedup_minhash_inc", "q_dedup_minhash_inc_fast"):
+            df = registry.QUERIES[qname](spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            for line in plan.splitlines():
+                assert not (
+                    "BroadcastHashJoin" in line and "LeftOuter" in line
+                ), (qname, line)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+        if adaptive_thr is None:
+            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+        else:
+            spark.conf.set(
+                "spark.sql.adaptive.autoBroadcastJoinThreshold", adaptive_thr
+            )
+
+
+def test_inc_prefix_postings_two_exchanges(spark, sf_dir):
+    """The frozen-order prefix prologue must keep setsim_pairs' linear
+    2-big-exchange shape (one sid exchange shared by the distinct
+    aggregate and the frozen-df window, one doc_id exchange for the
+    size+prefix windows) — the O(batch postings) claim is this plan."""
+    docs = _docs(spark, sf_dir)
+    plan = (
+        _inc_prefix_postings(docs, 1, 2, 5)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
+@pytest.mark.parametrize(
+    "qname,num,den,directed",
+    [("q_dedup_setsim_inc", 1, 2, False),
+     ("q_dedup_containment_inc", 4, 5, True)],
+)
+def test_inc_prefix_dedup_statuses_match_bruteforce(
+    spark, sf_dir, qname, num, den, directed
+):
+    """Statuses must equal the brute-force truth: prefix filtering is
+    COMPLETE (no recall loss to explain away) and verification exact,
+    so unlike the LSH family there is no probabilistic slack here."""
+    out = {
+        r["doc_id"]: r["status"]
+        for r in registry.QUERIES[qname](spark, sf_dir).collect()
+    }
+    docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text").collect()
+    sets = {}
+    for r in docs:
+        toks = r.text.split(" ")
+        sets[r.doc_id] = (
+            r.lang,
+            {" ".join(toks[i : i + 5]) for i in range(len(toks) - 4)},
+        )
+    truth = {}
+    for a, (la, sa) in sets.items():
+        if a % 3 != 0:
+            continue
+        status = "new"
+        for b, (lb, sb) in sets.items():
+            if a == b or la != lb:
+                continue
+            common = len(sa & sb)
+            if common == 0:  # candidates require a shared token
+                continue
+            ok = (
+                common * den >= len(sa) * num
+                if directed
+                else common * den >= len(sa | sb) * num
+            )
+            if not ok:
+                continue
+            if b % 3 != 0:
+                status = "dup_corpus"
+                break
+            elif b < a:
+                status = "dup_batch"
+        truth[a] = status
+    assert out == truth

@@ -104,3 +104,33 @@ def test_merge_is_one_transaction_on_duckdb(duck_db):
     rows = dict(conn.execute("SELECT id, resource FROM patient").fetchall())
     conn.close()
     assert rows == {1: "one", 2: "two"}  # update rolled back with the insert
+
+
+def test_merge_failure_raises_the_statement_error_not_the_rollback_error():
+    """A rollback that fails too (the connection is already gone) must
+    not replace the statement's own error, and the connection is still
+    closed."""
+
+    class Cursor:
+        def execute(self, sql):
+            if sql != "BEGIN":
+                raise ValueError("statement failed")
+
+    class Conn:
+        closed = False
+
+        def cursor(self):
+            return Cursor()
+
+        def commit(self):
+            raise AssertionError("a failed merge must not commit")
+
+        def rollback(self):
+            raise RuntimeError("rollback failed")
+
+        def close(self):
+            Conn.closed = True
+
+    with pytest.raises(ValueError, match="statement failed"):
+        jdbc_upsert.merge_stage_into_target(Conn, "patient", "patient__stage")
+    assert Conn.closed

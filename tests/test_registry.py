@@ -51,6 +51,59 @@ def test_every_query_is_oracled_or_shares_an_oracled_pipeline():
         assert shared, (rows_only, twin)
 
 
+#: Pin calls allowed outside operators/reuse.py, keyed by (module,
+#: enclosing function, method): the sync's two scoped ``cache()`` pins,
+#: released by an ExitStack when the sync returns or raises.
+SCOPED_PINS = {("sync/pipeline.py", "sync_resources", "cache"): 2}
+
+
+def test_every_pin_goes_through_reuse():
+    """Queries and operators pin through ``operators/reuse.py::pin``
+    only: a hand-placed localCheckpoint/checkpoint/persist/cache call
+    anywhere else in the package fails here."""
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    found: Counter = Counter()
+
+    def visit(node: ast.AST, rel: str, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            elif (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr
+                in ("localCheckpoint", "checkpoint", "persist", "cache")
+            ):
+                found[(rel, fn, child.func.attr)] += 1
+            visit(child, rel, inner)
+
+    pkg = Path(registry.__file__).resolve().parent
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel != "operators/reuse.py":
+            visit(ast.parse(path.read_text(), filename=str(path)), rel, "<module>")
+    assert dict(found) == SCOPED_PINS
+
+
+def test_basket_pairs_leaves_no_cached_plan(spark, sf_dir):
+    """A query's pin must not outlive its plan in the CacheManager: a
+    persisted basket table made every later run in the session read
+    the first run's blocks (an InMemoryRelation in its plan) instead
+    of computing its own."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # other tests cache frames of their own
+    for _ in range(2):
+        df = registry.QUERIES["q_basket_pairs"](spark, sf_dir)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan, plan
+        df.write.format("noop").mode("overwrite").save()
+        assert cache_manager.isEmpty()
+
+
 @pytest.mark.parametrize("name", sorted(registry.QUERIES))
 def test_query_runs_and_has_rows(name, spark, sf_dir):
     df = registry.QUERIES[name](spark, sf_dir)

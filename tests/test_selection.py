@@ -1,10 +1,12 @@
 """Semantics tests for the round-6 selection family (queries/
 selection.py): winnowing's overlap guarantee, DSIR's direction,
 RRF's fusion monotonicity, temperature scaling's tail-upweighting,
-and grouping-sets lattice equivalence."""
+grouping-sets lattice equivalence, the DoReMi mixture update and
+winnow_pairs' argument check."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fhir2sql_spark.operators.text import dsir_logweights, winnow_fingerprints
@@ -841,3 +843,34 @@ def test_winnow_inc_statuses_consistent_with_pairs(spark, sf_dir):
                 if a < d
             )
             assert (r["status"] == "dup_batch") == has_earlier, d
+
+
+def test_doremi_weights_are_a_smoothed_distribution(spark, sf_dir):
+    """The updated mixture must stay a probability distribution with
+    the 20% uniform floor, and the multiplicative update must point
+    the right way: domains with above-average mean doc length (the
+    fixture's excess proxy) gain weight relative to their corpus
+    share, below-average domains lose it."""
+    rows = QUERIES["q_sample_doremi"](spark, sf_dir).collect()
+    k = len(rows)
+    total = sum(r["w1"] for r in rows)
+    assert abs(total - 1.0) < 1e-2  # 4 dp rounding slack over k rows
+    floor = 0.2 / k
+    for r in rows:
+        assert r["w1"] >= floor - 1e-4
+        if r["excess"] > 0.05:
+            assert r["w1"] > r["w0"] * 0.8 + floor - 1e-4
+        if r["excess"] < -0.05:
+            assert r["w1"] < r["w0"] * 0.8 + floor + 1e-4
+
+
+def test_winnow_pairs_rejects_ambiguous_inputs(spark):
+    """ADVICE r8: docs= and fps= are mutually exclusive — passing both
+    silently ignored docs/k/w, hiding parameter mismatches."""
+    from fhir2sql_spark.operators.text import winnow_pairs
+
+    df = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="exactly one"):
+        winnow_pairs(df, fps=df.select("doc_id", F.lit(1).alias("__fp")))
+    with pytest.raises(ValueError, match="exactly one"):
+        winnow_pairs()

@@ -502,7 +502,7 @@ CHECKS: list[tuple[str, str, str]] = [
         "candidate pairs broadcast inside the verify; the flags "
         "classification join is UNHINTED (r9 — stats-elective only; "
         "forced-broadcast absence pinned by the threshold=-1 test in "
-        "tests/test_round9_ops.py)",
+        "tests/test_frozen_probe.py)",
     ),
     # (the r9 stop-bucket cap's WindowGroupLimit lives in the
     # pre-checkpoint candidate subtree, invisible in these final
